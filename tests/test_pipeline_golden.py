@@ -168,6 +168,26 @@ def test_full_pipeline_files(spark, fixture_path, tmp_path_factory):
     assert "End of report" in report
 
 
+def test_pipeline_leaves_no_cached_frame(spark, fixture_path, tmp_path_factory):
+    """run_cleaning_pipeline caches its flagged frame for the report
+    aggregates and the sink, and must release it before returning; the
+    returned frame stays lazily recomputable."""
+    from yanwenxian_week3_data_pipeline_spark.pipeline import run_cleaning_pipeline
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    out_dir = tmp_path_factory.mktemp("nocache")
+    out = run_cleaning_pipeline(
+        spark,
+        fixture_path,
+        out_dir / "cleaned_output.json",
+        out_dir / "quality_report.txt",
+        verbose=False,
+    )
+    assert cache_manager.isEmpty()
+    assert out.count() == 11
+
+
 def test_envelope_shapes(spark, tmp_path_factory):
     from yanwenxian_week3_data_pipeline_spark.sources.articles_json import load_articles
 

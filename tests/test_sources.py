@@ -113,38 +113,46 @@ def test_load_articles_nonlist_wrapper_falls_through(spark, tmp_path):
     assert rows[0].title == "T"
 
 
-def test_read_parquet_fanout_gates(spark, tmp_path):
-    """The under-split-scan fan-out must (a) leave small files alone —
-    below min_bytes the shuffle cannot pay for itself, (b) repartition a
-    big single-split file to defaultParallelism, and (c) self-disable when
-    the estimated split count already reaches the core count (the real-
-    scale case, emulated by shrinking maxPartitionBytes)."""
+def test_read_parquet_fanout_rule(spark, tmp_path, monkeypatch):
+    """One fan-out rule: an under-split input (estimated splits <
+    defaultParallelism), small or large, is repartitioned to
+    defaultParallelism; a multi-split input (the real-scale case, emulated
+    by shrinking maxPartitionBytes) and a non-local path get no Repartition
+    node; and the values never change, only the partitioning."""
+    from yanwenxian_week3_data_pipeline_spark.sources import tables
     from yanwenxian_week3_data_pipeline_spark.sources.tables import (
         read_parquet_fanout,
     )
 
+    def has_repartition(df):
+        return "Repartition" in df._jdf.queryExecution().logical().toString()
+
+    par = spark.sparkContext.defaultParallelism
     small = str(tmp_path / "small.parquet")
     spark.range(10).coalesce(1).write.parquet(small)
-    assert (
-        read_parquet_fanout(spark, small, 1 << 20).rdd.getNumPartitions() == 1
-    )
-
     big = str(tmp_path / "big.parquet")
-    spark.range(300_000).selectExpr(
+    spark.range(100_000).selectExpr(
         "id", "repeat(uuid(), 4) AS pad"
     ).coalesce(1).write.parquet(big)
-    par = spark.sparkContext.defaultParallelism
-    fanned = read_parquet_fanout(spark, big, 1 << 20)
-    assert fanned.rdd.getNumPartitions() == par
-    # values identical, only the partitioning moved
-    assert fanned.count() == 300_000
+
+    for path in (small, big):
+        plain = spark.read.parquet(path)
+        fanned = read_parquet_fanout(spark, path)
+        assert has_repartition(fanned)
+        assert fanned.rdd.getNumPartitions() == par
+        assert fanned.count() == plain.count()
+        assert sorted(fanned.collect()) == sorted(plain.collect())
 
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 << 10))
         # estimated splits = size/16KB >> cores -> no extra repartition node
-        df = read_parquet_fanout(spark, big, 1 << 20)
+        df = read_parquet_fanout(spark, big)
         assert df.rdd.getNumPartitions() > 1  # the scan itself is split
-        assert "Repartition" not in df._jdf.queryExecution().logical().toString()
+        assert not has_repartition(df)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+    # a non-local path (object store) has no known size: plain scan
+    monkeypatch.setattr(tables, "_local_parquet_bytes", lambda _p: None)
+    assert not has_repartition(read_parquet_fanout(spark, small))

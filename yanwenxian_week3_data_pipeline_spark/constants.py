@@ -255,21 +255,6 @@ MIX_HASH_SEED = 11
 # md5 families
 WSAMPLE_K = 100
 WSAMPLE_SEED = 104729
-
-# size gates for the under-split-scan fan-out (sources/tables.py
-# read_parquet_fanout): fan out only when the map work over the scan can
-# pay for the extra shuffle. TEXT scans (documents) carry heavy per-byte
-# map work (tokenize, 32 md5s per shingle) — 2 MB suffices; relational
-# tables (lineitem etc.) do cheap columnar arithmetic per byte — 8 MB.
-# Below the gate the measured fan-out is a LOSS (round-4 sf0.1
-# measurement); above it, measured sf1 wins: q1 5.9→2.9 s, minhash
-# 14.1→7.4 s. At real cluster scale scans have ≥ cores splits and the
-# fan-out self-disables.
-SCAN_FANOUT_TEXT_MIN_BYTES = 2 << 20
-# suffix-grain queries (docs_lrs_*) multiply map work by LRS_CAP (~30x),
-# so their fan-out pays at ~30x smaller inputs than the plain-text gate
-SCAN_FANOUT_SUFFIX_MIN_BYTES = 256 << 10
-SCAN_FANOUT_TABLE_MIN_BYTES = 8 << 20
 # stratified variant: independent per-source sample size
 WSAMPLE_PER_SOURCE_K = 5
 

@@ -45,18 +45,6 @@ def hash52_sql(expr: str, seed: int | None = None) -> str:
     return f"(('0x' || substr(md5({s}), 1, 13))::BIGINT)"
 
 
-def hash56_expr(col: Column, seed: int | None = None) -> Column:
-    """56-bit md5 hash (14 hex chars) — the h2 of the Kirsch-Mitzenmacher
-    MinHash family; 56 bits keep i·h2 (i < 32) inside signed-64."""
-    s = col if seed is None else F.concat(F.lit(f"{seed}:"), col)
-    return F.conv(F.substring(F.md5(s), 1, 14), 16, 10).cast("long")
-
-
-def hash56_sql(expr: str, seed: int | None = None) -> str:
-    s = expr if seed is None else f"('{seed}:' || {expr})"
-    return f"(('0x' || substr(md5({s}), 1, 14))::BIGINT)"
-
-
 def md5_split_exprs(col: Column) -> tuple[Column, Column]:
     """(h1, h2) Kirsch-Mitzenmacher base hashes from ONE md5 digest:
     h1 = hex chars 1-15 (60 bits), h2 = hex chars 16-29 (56 bits). Disjoint
@@ -100,11 +88,3 @@ def km_hash_sql(h1: str, h2: str, i: int) -> str:
     if i == 0:
         return h1
     return f"(({h1} + (({i} * {h2}) % {MINHASH_PRIME})) % {MINHASH_PRIME})"
-
-
-def md5_hex_expr(col: Column) -> Column:
-    return F.md5(col)
-
-
-def md5_hex_sql(expr: str) -> str:
-    return f"md5({expr})"

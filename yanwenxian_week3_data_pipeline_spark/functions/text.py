@@ -72,43 +72,3 @@ def is_missing_sql(expr: str) -> str:
 
 def not_missing_expr(col: Column) -> Column:
     return ~is_missing_expr(col)
-
-
-# nullif-blank: null when missing, else the trimmed original — the SQL-safe
-# coalesce building block used by validation's published-date fallback.
-def nullif_blank_expr(col: Column) -> Column:
-    return F.when(~is_missing_expr(col), col)
-
-
-def nullif_blank_sql(expr: str) -> str:
-    return f"(CASE WHEN NOT {is_missing_sql(expr)} THEN {expr} END)"
-
-
-# ---------------------------------------------------------------------------
-# Full-fidelity html.unescape UDF (non-oracle path; covers all named entities)
-# ---------------------------------------------------------------------------
-
-def clean_text_udf():
-    """Arrow-vectorized pandas UDF implementing the reference's exact
-    clean (full ``html.unescape`` + Python ``\\s+`` collapse). Used only when
-    input may contain entities outside constants.HTML_ENTITIES; the
-    expression variant is the default/hot path.
-    """
-    import html
-    import re
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    ws = re.compile(r"\s+")
-
-    @pandas_udf("string")
-    def _clean(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return ""
-            return ws.sub(" ", html.unescape(str(v))).strip()
-
-        return s.map(one)
-
-    return _clean

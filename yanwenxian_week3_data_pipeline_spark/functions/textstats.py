@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 from ..constants import BPE_PIECE_REGEX, LANG_STOPWORDS, QUALITY_STOPWORDS
-from .hashing import hash60_expr, hash60_sql
 
 # ---------------------------------------------------------------------------
 # Tokenization (over cleaned text)
@@ -178,14 +177,6 @@ def fingerprint_shape_expr(clean: Column) -> Column:
 def fingerprint_shape_sql(clean: str) -> str:
     toks = f"list_sort(list_distinct({tokens_sql(clean)}))"
     return f"md5(array_to_string({toks}, ' '))"
-
-
-def fingerprint_hash60_expr(clean: Column) -> Column:
-    return hash60_expr(clean)
-
-
-def fingerprint_hash60_sql(clean: str) -> str:
-    return hash60_sql(clean)
 
 
 ROLLING_BASE = 131

@@ -77,14 +77,6 @@ def signed_projection_sql(vec: str, plane: list[int]) -> str:
     return f"(CASE WHEN {dot} >= 0 THEN 1 ELSE 0 END)"
 
 
-def band_value_expr(vec: Column, planes: list[list[int]]) -> Column:
-    """Integer band key: bit j of the band = sign bit of plane j."""
-    total = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        total = total + signed_projection_expr(vec, plane) * F.lit(1 << j).cast("long")
-    return total
-
-
 def band_value_sql(vec: str, planes: list[list[int]]) -> str:
     terms = " + ".join(
         f"({signed_projection_sql(vec, plane)} * {1 << j})" for j, plane in enumerate(planes)

@@ -572,7 +572,7 @@ def dedup_containment(
     id_col: str,
     threshold: float,
     max_df: int,
-    small_hint=F.broadcast,
+    small_hint=lambda side: side,
 ) -> DataFrame:
     """Containment near-duplicate pairs: containment(A, B) =
     |shingles(A) ∩ shingles(B)| / min(|A|, |B|) — catches SUBSET
@@ -620,11 +620,13 @@ def dedup_containment(
     jaccard) — identical to the array-intersect formulation.
 
     ``small_hint`` wraps the per-doc size table and the common-shingle
-    slice (both far smaller than the corpus, but SF-scaling): callers
-    with a size gate pass it (plans layer: ``_gated_dim``) so the hint
-    degrades to a shuffled join past the broadcast budget; the default
-    broadcasts, which is right for bounded inputs. The 1-row c_tot
-    scalar stays unconditionally broadcast.
+    slice (both far smaller than the corpus, but SF-scaling). The default
+    adds no hint, so Spark's own size gate decides: the planner
+    broadcasts a side only under ``spark.sql.autoBroadcastJoinThreshold``
+    and otherwise plans a shuffled join (AQE may still convert one at
+    runtime from measured sizes). Callers with their own gate pass it
+    (plans layer: ``_gated_dim``). The 1-row c_tot scalar stays
+    unconditionally broadcast.
 
     r11 negative result — PPJoin-style positional prefix filtering of
     the candidate self-join was instrumented and REJECTED (do not retry

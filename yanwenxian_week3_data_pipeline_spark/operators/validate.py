@@ -73,10 +73,3 @@ def passed_expr(rules: list[Rule]) -> Column:
     for f in fired[1:]:
         out = out | f
     return ~out
-
-
-def keep_valid(df: DataFrame, rules: list[Rule]) -> DataFrame:
-    """flt_valid_rows (cleaner.py:361-363): keep rows passing all rules —
-    expressed as a filter on the computed column, not an anti-join, so no
-    shuffle is introduced."""
-    return with_validation(df, rules).where(F.col("passed")).drop("passed", "reason", "message")

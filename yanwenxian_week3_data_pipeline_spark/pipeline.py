@@ -241,6 +241,9 @@ def run_cleaning_pipeline(
     # 4+6. save valid records
     valid = flagged.where(kept & F.col("passed"))
     n_saved = save_records_pretty(valid.orderBy(RECORD_ID), output_path, columns=report_cols)
+    # the sink was the last job to read the cache; the returned frame below
+    # recomputes from its lineage if the caller runs it
+    flagged.unpersist(blocking=False)
     say(f"[5/6] saved {n_saved} valid records to {output_path}")
 
     # 5. render + save report

@@ -27,9 +27,7 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import hash60_expr, hash60_sql
 from . import QuerySpec
-from .relational import _t_shuffle_input
-from ..constants import SCAN_FANOUT_TABLE_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
+from .relational import _t, _t_shuffle_input
 
 DEC = "decimal(18,2)"
 # Moment sums: inputs cast to (25,6). Width >19 forces DuckDB's product
@@ -38,13 +36,6 @@ DEC = "decimal(18,2)"
 # (precision-loss scale adjustment). Both are exact for these inputs (true
 # product scale ≤ 4), so the double casts downstream are bit-identical.
 DEC6 = "decimal(25,6)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # size-gated under-split-scan fan-out (sources/tables.py)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -67,20 +67,9 @@ from ..functions.textstats import (
     tokens_sql,
 )
 from . import QuerySpec
-from .documents_domain import CLEAN_SQL
-from ..constants import SCAN_FANOUT_TEXT_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
+from .documents_domain import CLEAN_SQL, _docs
 
 _CLEANED = f"SELECT doc_id, {CLEAN_SQL} AS c FROM documents"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # size-gated under-split-scan fan-out: the signature/tokenize map work
-    # over a one-split documents file serializes on one core without it
-    # (sources/tables.py; no-op at sf0.01 test scale and at multi-split scale)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/documents.parquet", SCAN_FANOUT_TEXT_MIN_BYTES
-    )
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,17 +9,25 @@ queries are assembled from these fragments.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..constants import MAX_CONTENT_LENGTH, MIN_CONTENT_LENGTH
 from ..functions.text import clean_text_expr, clean_text_sql, is_missing_expr, is_missing_sql
 from ..operators.validate import Rule, failure_rule
+from ..sources.tables import read_parquet_fanout
 
 KNOWN_LANGS = ("de", "en", "es", "fr", "zh")
 
 # ---------------------------------------------------------------------------
 # Spark side
 # ---------------------------------------------------------------------------
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the documents scan for the curation/LM plans: one split per file, so
+    # the tokenize/shingle/hash map work needs the scan fan-out
+    # (sources/tables.py) to run on more than one core
+    return read_parquet_fanout(spark, f"{sf_dir}/documents.parquet")
+
 
 def cleaned_documents(documents: DataFrame) -> DataFrame:
     """doc_id, text_clean, lang, source (stage: clean)."""

@@ -25,19 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import QuerySpec
-from .relational import _t_shuffle_input
-from ..constants import KCORE_K, KCORE_ROUNDS, SCAN_FANOUT_TABLE_MIN_BYTES
+from .relational import _t, _t_shuffle_input
+from ..constants import KCORE_K, KCORE_ROUNDS
 from ..operators.pagerank import pagerank, pagerank_oracle_sql
-from ..sources.tables import read_parquet_fanout
 
 _PR_ITERS = 10
 _PR_TOPK = 40
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
 
 
 def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -77,21 +77,12 @@ from ..operators.similarity import (
     semantic_dedup,
 )
 from . import QuerySpec
-from .documents_domain import CLEAN_SQL
+from .documents_domain import CLEAN_SQL, _docs
 
 SIM_QUERY_IDS = [0, 1, 2, 3, 4]
 SIM_K = 10
 
 _CLEANED = f"SELECT doc_id, {CLEAN_SQL} AS c FROM documents"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # size-gated under-split-scan fan-out: the signature/tokenize map work
-    # over a one-split documents file serializes on one core without it
-    # (sources/tables.py; no-op at sf0.01 test scale and at multi-split scale)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/documents.parquet", SCAN_FANOUT_TEXT_MIN_BYTES
-    )
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2620,8 +2611,6 @@ LIMIT {REPEATED_SPAN_TOPK}
 # ---------------------------------------------------------------------------
 
 from ..constants import MIX_BUCKETS, MIX_HASH_SEED, PACK_TOKEN_BUDGET  # noqa: E402
-from ..constants import SCAN_FANOUT_TEXT_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
 
 
 def _q_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2974,20 +2963,7 @@ FROM assigned s WHERE s.id NOT IN (SELECT id FROM dropped)
 # ---------------------------------------------------------------------------
 
 def _toks_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # suffix-grain fan-out floor: the generic gate (SCAN_FANOUT_TEXT_MIN
-    # _BYTES = 2 MB) keys on INPUT bytes, but the suffix explode multiplies
-    # map work by LRS_CAP (~30×) — a one-split 0.6 MB documents file builds
-    # ~45 MB of span strings on ONE core (measured r7: the explode stage
-    # was ~1.0 s of the 2.9–4.1 s sf0.1 wall, serialized). The lower floor
-    # fans out whenever the ×cap work is worth 32 tasks; still a no-op at
-    # sf0.01 oracle scale and at multi-split real scale.
-    from ..constants import SCAN_FANOUT_SUFFIX_MIN_BYTES
-    from ..sources.tables import read_parquet_fanout
-
-    d = read_parquet_fanout(
-        spark, f"{sf_dir}/documents.parquet", SCAN_FANOUT_SUFFIX_MIN_BYTES
-    )
-    return d.select(tokens_expr(clean_text_expr(F.col("text"))).alias("toks"))
+    return _docs(spark, sf_dir).select(tokens_expr(clean_text_expr(F.col("text"))).alias("toks"))
 
 
 def _q_lrs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -53,20 +53,12 @@ from ..constants import (
     NB_SPLIT_SEED,
     PMI_MIN_COUNT,
     PMI_TOPK,
-    SCAN_FANOUT_TEXT_MIN_BYTES,
 )
 from ..functions.hashing import hash60_expr, hash60_sql
 from ..functions.text import clean_text_expr
 from ..functions.textstats import tokens_expr, tokens_sql
 from ..operators.bpe import bpe_encode_oracle_sql, bpe_learn, bpe_oracle_sql
-from ..sources.tables import read_parquet_fanout
-from .documents_domain import CLEAN_SQL
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/documents.parquet", SCAN_FANOUT_TEXT_MIN_BYTES
-    )
+from .documents_domain import CLEAN_SQL, _docs
 
 
 _CLEANED_LM = f"SELECT doc_id, {CLEAN_SQL} AS c FROM documents"

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from . import QuerySpec
-from ..constants import SCAN_FANOUT_TABLE_MIN_BYTES
 from ..sources.tables import _local_parquet_bytes, read_parquet_fanout
 
 DEC = "decimal(18,2)"
@@ -64,13 +63,10 @@ def _gated_dim(dim: DataFrame, sf_dir: str, table: str = "customer") -> DataFram
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # size-gated fan-out: single-file tables are one input split (one
-    # row group), so Q1-class scan+partial-agg work serializes on one
-    # core without it; no-op at sf0.01 test scale and at real multi-split
-    # scale (see sources/tables.py)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
+    # scan fan-out: single-file tables are one input split (one row
+    # group), so Q1-class scan+partial-agg work would serialize on one
+    # core; a no-op at real multi-split scale (see sources/tables.py)
+    return read_parquet_fanout(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _t_shuffle_input(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -27,19 +27,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from . import QuerySpec
-from .relational import _gated_dim, _t_shuffle_input
-from ..constants import SCAN_FANOUT_TABLE_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
+from .relational import _gated_dim, _t, _t_shuffle_input
 
 DEC = "decimal(18,2)"
 TS = "timestamp_ntz"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # size-gated under-split-scan fan-out (sources/tables.py)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
 
 
 def _revenue() -> F.Column:

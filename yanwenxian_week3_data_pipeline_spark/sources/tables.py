@@ -54,37 +54,27 @@ def _local_parquet_bytes(path: str) -> int | None:
     return total
 
 
-def read_parquet_fanout(
-    spark: SparkSession, path: str, min_bytes: int
-) -> DataFrame:
-    """``spark.read.parquet`` plus a SIZE-GATED scan fan-out for
-    under-split inputs.
+def read_parquet_fanout(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet`` plus one scan fan-out rule: when the
+    estimated split count (total bytes / spark.sql.files.maxPartitionBytes)
+    is below ``defaultParallelism``, round-robin ``repartition`` the scan
+    to ``defaultParallelism``.
 
-    Parquet parallelism is bounded by row groups: a single small-file
-    table (the driver testdata layout — one file, one row group) is ONE
-    input split no matter how many cores exist, so every map-side
-    operator over it (tokenize + 32 md5s per shingle for MinHash, the
-    decimal partial aggregates of Q1) runs on one core. Measured at the
-    sf1-equivalent set: q1 5.9 s → 2.9 s, dedup_minhash_lsh 14.1 s →
-    7.4 s from one explicit round-robin repartition after the scan.
+    Parquet parallelism is bounded by row groups, so a one-file, one-row-
+    group table is one input split however many cores exist, and every
+    narrow operator before the first exchange would run on one core.
+    The rule does nothing where the scan already parallelizes: a multi-
+    split input (the 100 TB case) or a non-local path (size unknown,
+    assume real-scale storage).
 
-    The gate keeps the repartition out of every case where it cannot pay:
-      - total bytes < ``min_bytes``  → the map work is too small to beat
-        the shuffle + task overhead (the round-4 sf0.1 measurement that
-        rejected an unconditional loader fan-out);
-      - estimated splits (total / spark.sql.files.maxPartitionBytes)
-        already ≥ defaultParallelism → the scan parallelizes by itself —
-        this is the 100 TB case, where the helper is a no-op by
-        construction;
-      - non-local path → size unknown, assume real-scale storage.
-
-    Values are partitioning-independent for every registered query
-    (proven by the local[4]/local[8] full sweeps), so this is a pure
-    plan-level change.
+    Lemma: values are partitioning-independent for every registered query
+    (oracle sweeps at local[4] and local[8]), and the fan-out is one
+    round-robin exchange — no sort, no cartesian product, no driver
+    collect. Measurements: docs/FANOUT_RULE_AB.md.
     """
     df = spark.read.parquet(path)
     total = _local_parquet_bytes(path)
-    if total is None or total < min_bytes:
+    if total is None:
         return df
     try:
         mpb_raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
