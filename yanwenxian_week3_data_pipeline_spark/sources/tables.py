@@ -69,8 +69,11 @@ def read_parquet_fanout(spark: SparkSession, path: str) -> DataFrame:
 
     Lemma: values are partitioning-independent for every registered query
     (oracle sweeps at local[4] and local[8]), and the fan-out is one
-    round-robin exchange — no sort, no cartesian product, no driver
-    collect. Measurements: docs/FANOUT_RULE_AB.md.
+    round-robin exchange (with Spark's per-partition pre-sort for retry
+    determinism, spark.sql.execution.sortBeforeRepartition), no cartesian
+    product, no driver collect. Catalyst pushes deterministic filters
+    below that exchange, so filter work stays in the scan task.
+    Measurements: docs/FANOUT_RULE_AB.md.
     """
     df = spark.read.parquet(path)
     total = _local_parquet_bytes(path)
