@@ -115,11 +115,12 @@ def main() -> None:
     SUBSEC_THRESHOLD = float(os.environ.get("SPARK_GRAFT_BENCH_SUBSEC", "0.6"))
     SUBSEC_EXTRA_RUNS = 4 if WARM_RUNS >= 5 else 0
 
-    def run_set(names: dict | list) -> tuple[dict, dict, dict, dict, dict]:
+    def run_set(names: dict | list) -> tuple[dict, dict, dict, dict, dict, dict]:
         timings: dict[str, float] = {}
         cold: dict[str, float] = {}
         iqr: dict[str, float] = {}
         samples: dict[str, list[float]] = {}
+        counts: dict[str, int] = {}
         loads: dict[str, list[float | None]] = {}
         for name in sorted(names):
             spec = registry[name]
@@ -151,19 +152,20 @@ def main() -> None:
             # driver recorded parsed: null — if anything tail-buffers the
             # line before parsing, unbounded per-query arrays are the one
             # thing that grows with warm-run extensions). The median/IQR
-            # statistics below are still computed over EVERY warm sample;
-            # today's default protocol (5 warm + 4 sub-second extras)
-            # emits at most 9 anyway, so the cap only binds if a caller
-            # raises SPARK_GRAFT_BENCH_WARM. Keys and semantics unchanged.
+            # statistics below are still computed over EVERY warm sample,
+            # and ``warm_run_count`` records how many there were, so a
+            # reader can tell when the cap bound (it only can if a caller
+            # raises SPARK_GRAFT_BENCH_WARM past the default 5 + 4).
             samples[name] = warm[-9:]
+            counts[name] = len(warm)
             timings[name] = round(statistics.median(sorted(warm)), 3)
             q = statistics.quantiles(sorted(warm), n=4, method="inclusive")
             iqr[name] = round(q[2] - q[0], 3)
             loads[name] = [load_at_start, _load1m()]
-        return timings, cold, iqr, samples, loads
+        return timings, cold, iqr, samples, counts, loads
 
-    timings, cold, iqr, samples, loads = run_set(specs)
-    ext_timings, ext_cold, ext_iqr, ext_samples, ext_loads = run_set(EXTENDED)
+    timings, cold, iqr, samples, counts, loads = run_set(specs)
+    ext_timings, ext_cold, ext_iqr, ext_samples, ext_counts, ext_loads = run_set(EXTENDED)
     load_end = _load1m()
 
     # Contamination flag: the bench's OWN 32-thread bursts push the 1-min
@@ -216,11 +218,13 @@ def main() -> None:
                 "agg": f"median_of_{WARM_RUNS}_warm",
                 "iqr_sec": iqr,
                 "warm_samples_sec": samples,
+                "warm_run_count": counts,
                 "cold_run_sec": cold,
                 "extended_total_wall": round(sum(ext_timings.values()), 3),
                 "extended_queries": ext_timings,
                 "extended_iqr_sec": ext_iqr,
                 "extended_warm_samples_sec": ext_samples,
+                "extended_warm_run_count": ext_counts,
                 "extended_cold_run_sec": ext_cold,
                 "load_1m_start": load_start,
                 "load_1m_end": load_end,

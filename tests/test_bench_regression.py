@@ -182,3 +182,19 @@ def test_second_strike_confirms_real_regression(br, spark, sf_dir, tmp_path, mon
         ["x", _write(tmp_path, "n.json", new), _write(tmp_path, "b.json", base)],
     )
     assert br.main() == 1
+
+
+def test_baseline_warns_when_sample_cap_binds():
+    path = Path(__file__).resolve().parents[1] / "tools" / "make_bench_baseline.py"
+    spec = importlib.util.spec_from_file_location("make_bench_baseline", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    line = {
+        "warm_samples_sec": {"qa": [1.0] * 9, "qb": [1.0] * 5},
+        "warm_run_count": {"qa": 12, "qb": 5},
+        "extended_warm_samples_sec": {"qc": [2.0] * 9},
+        "extended_warm_run_count": {"qc": 9},
+    }
+    warnings = mod.truncated_sample_warnings(line)
+    assert len(warnings) == 1 and "qa: 12 warm runs" in warnings[0]
+    assert mod.truncated_sample_warnings({"warm_samples_sec": {"qa": [1.0] * 9}}) == []

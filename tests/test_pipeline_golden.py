@@ -168,10 +168,36 @@ def test_full_pipeline_files(spark, fixture_path, tmp_path_factory):
     assert "End of report" in report
 
 
+def test_report_failed_details_and_distribution_order(spark, fixture_path, tmp_path_factory):
+    """``Index:`` is the 0-based position in the post-dedup frame ordered by
+    record_id (the reference's reset_index after dedup), not the record_id.
+    The distribution is Counter.most_common order: count descending, ties
+    by first occurrence in that frame (content at index 1 before title at
+    index 8)."""
+    from yanwenxian_week3_data_pipeline_spark.pipeline import run_cleaning_pipeline
+
+    out_dir = tmp_path_factory.mktemp("details")
+    out_report = out_dir / "quality_report.txt"
+    run_cleaning_pipeline(spark, fixture_path, out_dir / "cleaned_output.json", out_report, verbose=False)
+    lines = out_report.read_text().splitlines()
+
+    indices = [int(ln.split(":", 1)[1]) for ln in lines if ln.startswith("  Index:")]
+    assert indices == [1, 2, 3, 4, 5, 8, 10]
+
+    start = lines.index("4. VALIDATION FAILURE DISTRIBUTION") + 2
+    dist = lines[start : lines.index("", start)]
+    assert dist == [
+        "     3  URL must start with http:// or https:// and have valid format.",
+        "     2  Published date is missing or empty.",
+        "     1  Content is too short (minimum 120 characters).",
+        "     1  Title exceeds maximum length (500 characters).",
+    ]
+
+
 def test_pipeline_leaves_no_cached_frame(spark, fixture_path, tmp_path_factory):
-    """run_cleaning_pipeline caches its flagged frame for the report
-    aggregates and the sink, and must release it before returning; the
-    returned frame stays lazily recomputable."""
+    """run_cleaning_pipeline runs as one action over an uncached frame and
+    must leave no cache entry behind; the returned frame stays lazily
+    recomputable."""
     from yanwenxian_week3_data_pipeline_spark.pipeline import run_cleaning_pipeline
 
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
@@ -186,6 +212,65 @@ def test_pipeline_leaves_no_cached_frame(spark, fixture_path, tmp_path_factory):
     )
     assert cache_manager.isEmpty()
     assert out.count() == 11
+
+
+def test_pipeline_is_one_action(spark, fixture_path, tmp_path_factory):
+    """One call starts at most 5 jobs: schema inference, the shuffle-map
+    stages and the one collect (the cached, multi-action shape started
+    25)."""
+    from yanwenxian_week3_data_pipeline_spark.pipeline import run_cleaning_pipeline
+
+    sc = spark.sparkContext
+    out_dir = tmp_path_factory.mktemp("onejob")
+    sc.setJobGroup("test_pipeline_is_one_action", "run_cleaning_pipeline")
+    try:
+        run_cleaning_pipeline(
+            spark, fixture_path, out_dir / "cleaned_output.json", out_dir / "quality_report.txt", verbose=False
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_pipeline_is_one_action")
+    assert 0 < len(jobs) <= 5
+
+
+def test_report_metrics_observed_above_last_exchange(spark, fixture_path):
+    """Lemma (a) of pipeline.py: CollectMetrics runs in the result stage,
+    above the dedup window's exchange, and the _kept filter stays above it
+    (so the metrics see every flagged row, exactly once)."""
+    from yanwenxian_week3_data_pipeline_spark.pipeline import clean_articles, flag_stages, report_action
+    from yanwenxian_week3_data_pipeline_spark.sources.articles_json import load_articles
+
+    flagged = flag_stages(clean_articles(load_articles(spark, fixture_path)))
+    frame, _ = report_action(flagged, ["title", "content", "url"])
+    plan = frame._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def first(node):
+        return next(i for i, ln in enumerate(plan) if ln.lstrip(" :+-").startswith(node))
+
+    kept_filter = next(i for i, ln in enumerate(plan) if "Filter" in ln and "_kept" in ln)
+    assert kept_filter < first("CollectMetrics") < first("Exchange")
+
+
+def test_load_articles_single_document_ids_without_shuffle(spark, fixture_path):
+    """A multiLine document is one partition, so monotonically_increasing_id
+    already is the dense file-order position: no window, no _pid shuffle."""
+    import contextlib
+    import io
+
+    from yanwenxian_week3_data_pipeline_spark.sources.articles_json import load_articles
+
+    df = load_articles(spark, fixture_path)
+    titles = [r["title"] for r in _fixture_records()]
+    rows = sorted(df.select("record_id", "title").collect())
+    assert [r.record_id for r in rows] == list(range(17))
+    assert [r.title for r in rows] == titles
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    plan = buf.getvalue()
+    assert "Window" not in plan
+    assert "hashpartitioning(_pid" not in plan
 
 
 def test_envelope_shapes(spark, tmp_path_factory):

@@ -14,7 +14,10 @@ The baseline file drives tools/bench_regression.py. It holds, per query:
 
 - ``queries`` / ``extended_queries``: warm medians recomputed from the
   bench line's ``warm_samples_sec`` (NOT the line's own medians — the
-  recompute is the audit that the medians match their samples);
+  recompute is the audit that the medians match their samples). bench.py
+  caps that array at 9; where the line's ``warm_run_count`` says more runs
+  were taken, the recompute covers only the tail and a warning names the
+  query;
 - ``iqr_sec`` / ``extended_iqr_sec``: warm IQRs, same recompute;
 - ``isolated_sec`` / ``isolated_iqr_sec`` (with ``--isolated``): a
   median + IQR measured the way the tripwire's SECOND STRIKE measures —
@@ -47,6 +50,25 @@ def _med_iqr(samples: list[float]) -> tuple[float, float]:
     s = sorted(samples)
     q = statistics.quantiles(s, n=4, method="inclusive")
     return round(statistics.median(s), 3), round(q[2] - q[0], 3)
+
+
+def truncated_sample_warnings(line: dict) -> list[str]:
+    """One warning per query whose ``warm_run_count`` exceeds the samples
+    the line carries (bench.py's 9-sample cap bound). Lines older than
+    the count key give no warning."""
+    out = []
+    for sec, cnt in (
+        ("warm_samples_sec", "warm_run_count"),
+        ("extended_warm_samples_sec", "extended_warm_run_count"),
+    ):
+        for name, n in sorted(line.get(cnt, {}).items()):
+            kept = len(line.get(sec, {}).get(name, []))
+            if n > kept:
+                out.append(
+                    f"make-bench-baseline: WARNING {name}: {n} warm runs, only the last "
+                    f"{kept} samples stored; its median/IQR is recomputed over that tail"
+                )
+    return out
 
 
 def _isolated_one(name: str, sf_dir: str) -> None:
@@ -152,6 +174,8 @@ def main() -> int:
     with open(src) as f:
         line = json.loads(f.read().strip().splitlines()[-1])
 
+    for w in truncated_sample_warnings(line):
+        print(w, file=sys.stderr)
     base: dict = {"sf": line.get("sf", 0.1)}
     for sec, med_key, iqr_key in (
         ("warm_samples_sec", "queries", "iqr_sec"),

@@ -1,9 +1,11 @@
 """snk_json_records (reference save_clean_data, cleaner.py:146-154).
 
 Two modes:
-- ``save_records_pretty`` — a single pretty-printed JSON array file, the
-  reference's output shape. Collects to the driver: valid ONLY for
-  fixture-scale outputs (the valid article set). Creates parent dirs.
+- ``save_records_pretty`` — writes an already-collected list of records as
+  one pretty-printed JSON array file, the reference's output shape. It runs
+  no Spark job: ``run_cleaning_pipeline`` builds the list from the rows of
+  its one action (the valid rows, sorted by record_id on the driver), so
+  the sink adds no sort and no second pass. Creates parent dirs.
 - ``save_records_distributed`` — ``df.write.json`` (JSONL, splittable,
   parallel) — the 100 TB path.
 """
@@ -16,14 +18,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 
 
-def save_records_pretty(df: DataFrame, path: str | Path, columns: list[str] | None = None) -> int:
+def save_records_pretty(records: list[dict], path: str | Path) -> int:
     path = Path(path)
     path.parent.mkdir(parents=True, exist_ok=True)
-    cols = columns or df.columns
-    records = [
-        {c: row[c] for c in cols}
-        for row in df.select(*cols).toLocalIterator()
-    ]
     path.write_text(json.dumps(records, indent=2, ensure_ascii=False), encoding="utf-8")
     return len(records)
 

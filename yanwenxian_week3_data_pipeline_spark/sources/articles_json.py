@@ -27,21 +27,23 @@ from ..schema import ARTICLE_SCHEMA, RECORD_ID, conform
 def _with_record_id(df: DataFrame) -> DataFrame:
     """Dense ingest-order id with full parallelism (zipWithIndex shape).
 
-    ``monotonically_increasing_id`` encodes (partition index, in-partition
-    position), so ranking WITHIN each partition and adding a per-partition
-    row-count offset (one tiny count job, broadcast back) reproduces the
-    global ingest order without ever sorting the dataset into one task — a
-    plain ``Window.orderBy(mono)`` is a global window, which drags every
-    row through a single partition and caps the reader at one core.
-    Single-partition inputs (any multiLine document) skip the count job."""
+    ``monotonically_increasing_id`` puts the partition index in the high
+    bits and the in-partition position in the low 33. On a single-partition
+    input (any multiLine document) the high bits are 0, so it already is
+    the dense 0..n-1 position: no window, no shuffle. Otherwise ranking
+    WITHIN each partition and adding a per-partition row-count offset (one
+    tiny count job, broadcast back) reproduces the global ingest order
+    without ever sorting the dataset into one task — a plain
+    ``Window.orderBy(mono)`` is a global window, which drags every row
+    through a single partition and caps the reader at one core."""
+    if df.rdd.getNumPartitions() <= 1:
+        return df.withColumn(RECORD_ID, F.monotonically_increasing_id())
+
     mono = df.withColumn("_mono", F.monotonically_increasing_id()).withColumn(
         "_pid", F.spark_partition_id()
     )
     w = Window.partitionBy("_pid").orderBy("_mono")
     rn = (F.row_number().over(w) - 1).cast("long")
-
-    if df.rdd.getNumPartitions() <= 1:
-        return mono.withColumn(RECORD_ID, rn).drop("_mono", "_pid")
 
     spark = df.sparkSession
     counts = sorted(
