@@ -189,17 +189,6 @@ def main() -> None:
         )
     )
 
-    # record non-default MinHash signatures so a certification produced under
-    # a leftover A/B env override is detectable in the artifact (ADVICE r9);
-    # absent key = production defaults
-    from yanwenxian_week3_data_pipeline_spark import constants as _c
-
-    minhash_override = (
-        {"num_hashes": _c.MINHASH_NUM_HASHES, "bands": _c.MINHASH_BANDS}
-        if _c.MINHASH_OVERRIDE_ACTIVE
-        else None
-    )
-
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -232,11 +221,6 @@ def main() -> None:
                 "extended_load_1m_per_query": ext_loads,
                 "load_1m_max": round(max(observed), 2) if observed else None,
                 "load_contaminated": contaminated,
-                **(
-                    {"minhash_override": minhash_override}
-                    if minhash_override
-                    else {}
-                ),
             }
         )
     )

@@ -1,54 +1,10 @@
-"""Import-time guards on the MinHash A/B env overrides (ADVICE r9): a stray
-YWX_MINHASH_* variable left over from an experiment shell must not silently
-change production signatures, and a non-divisible num_hashes/bands combo
-must not floor-truncate rows-per-band (silently dropping trailing hashes
-from banding). Subprocess-based because the guard fires at module import."""
+"""The MinHash shape is fixed: 32 hashes in 8 bands of 4 rows. Both the
+Spark expressions and the DuckDB oracle SQL derive from these names."""
 
 from __future__ import annotations
 
-import os
-import subprocess
-import sys
-
-_PROBE = (
-    "from yanwenxian_week3_data_pipeline_spark import constants as c;"
-    "print(c.MINHASH_NUM_HASHES, c.MINHASH_BANDS, c.MINHASH_OVERRIDE_ACTIVE)"
-)
-
-
-def _run(env_extra: dict[str, str]) -> subprocess.CompletedProcess:
-    env = {k: v for k, v in os.environ.items() if not k.startswith("YWX_MINHASH")}
-    env.update(env_extra)
-    return subprocess.run(
-        [sys.executable, "-c", _PROBE], capture_output=True, text=True, env=env
-    )
+from yanwenxian_week3_data_pipeline_spark import constants as c
 
 
 def test_defaults_import_clean():
-    p = _run({})
-    assert p.returncode == 0, p.stderr
-    assert p.stdout.split() == ["32", "8", "False"]
-
-
-def test_override_refused_without_experiment_flag():
-    p = _run({"YWX_MINHASH_NUM_HASHES": "16"})
-    assert p.returncode != 0
-    assert "YWX_MINHASH_EXPERIMENT" in p.stderr
-
-
-def test_override_allowed_with_experiment_flag_and_recorded():
-    p = _run({"YWX_MINHASH_NUM_HASHES": "16", "YWX_MINHASH_EXPERIMENT": "1"})
-    assert p.returncode == 0, p.stderr
-    assert p.stdout.split() == ["16", "8", "True"]
-
-
-def test_non_divisible_combo_refused():
-    p = _run(
-        {
-            "YWX_MINHASH_NUM_HASHES": "30",
-            "YWX_MINHASH_BANDS": "8",
-            "YWX_MINHASH_EXPERIMENT": "1",
-        }
-    )
-    assert p.returncode != 0
-    assert "divisible" in p.stderr
+    assert (c.MINHASH_NUM_HASHES, c.MINHASH_BANDS, c.MINHASH_ROWS_PER_BAND) == (32, 8, 4)

@@ -287,9 +287,10 @@ def test_envelope_shapes(spark, tmp_path_factory):
     df = load_articles(spark, str(single))
     assert df.count() == 1
 
-    empty = d / "empty.json"
-    empty.write_text("[]")
-    assert load_articles(spark, str(empty)).count() == 0
+    for name, text in [("empty.json", "[]"), ("wrapped_empty.json", '{"articles": []}'),
+                       ("wrapped_scalars.json", '{"articles": [1, 2]}')]:
+        (d / name).write_text(text)
+        assert load_articles(spark, str(d / name)).count() == 0, name
 
 
 def test_cli_main(spark, fixture_path, tmp_path_factory, capsys):
@@ -309,11 +310,24 @@ def test_cli_main(spark, fixture_path, tmp_path_factory, capsys):
     assert len(json.loads(out_json.read_text())) == len(EXPECTED_VALID_IDS)
     assert "End of report" in out_report.read_text()
 
+    spark.catalog.clearCache()
     rc = main([str(fixture_path), "--validate-only"], spark=spark)
     assert rc == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     out = capsys.readouterr().out
     assert "Validation Report" in out
     assert "Total records:  17" in out
+    # count desc, ties in first-occurrence (record_id) order
+    dist = out.split("-" * 50 + "\n", 1)[1].split("\n\n", 1)[0].splitlines()
+    assert dist == [
+        "     3  URL must start with http:// or https:// and have valid format.",
+        "     2  Title is missing or empty.",
+        "     1  Content is missing or empty.",
+        "     1  URL is missing or empty.",
+        "     1  Content is too short (minimum 120 characters).",
+        "     1  Title exceeds maximum length (500 characters).",
+        "     1  Published date is missing or empty.",
+    ]
 
 
 def test_observe_funnel_matches_aggregate(spark, fixture_path):

@@ -1,6 +1,9 @@
 #!/bin/sh
 # Full round gate, in dependency order (one Spark JVM at a time):
-#   1. pytest           (~6 min)  unit/golden/plan/property/streaming
+#   1. pytest           (~6 min)  unit/golden/plan/property/streaming;
+#                                 -rs lists each skip with its reason (the
+#                                 reference-golden parity tests skip when
+#                                 the reference checkout is absent)
 #   2. sf0.01 sweep     (~3 min)  driver-exact oracle gate, all queries
 #   3. sf0.01 TZ sweep  (~3 min)  same, under a non-UTC session zone
 #   4. plan audit       (~2 min)  registry-wide anti-pattern scan
@@ -20,7 +23,7 @@ if [ -n "$(git status --porcelain)" ]; then
   exit 1
 fi
 echo "round gate: $(date -u +%FT%TZ) at commit $(git rev-parse --short HEAD)"
-python -m pytest tests/ -q
+python -m pytest tests/ -q -rs
 python tools/verify_all.py /root/testdata/sf0.01
 VERIFY_TZ=America/New_York python tools/verify_all.py /root/testdata/sf0.01
 python tools/plan_audit.py

@@ -145,17 +145,7 @@ def main() -> int:
             # block-manager storage flat (session.py contract)
             release_persistent_rdds(spark)
     status = "ALL MATCH" if not bad else f"FAILED: {bad}"
-    from yanwenxian_week3_data_pipeline_spark import constants as _c
-
-    override = (
-        f" [MINHASH OVERRIDE ACTIVE: num_hashes={_c.MINHASH_NUM_HASHES}"
-        f" bands={_c.MINHASH_BANDS}]"
-        if _c.MINHASH_OVERRIDE_ACTIVE
-        else ""
-    )
-    print(
-        f"{len(names)} queries ({rows_only} rows-only) in {time.time() - t0:.0f}s -> {status}{override}"
-    )
+    print(f"{len(names)} queries ({rows_only} rows-only) in {time.time() - t0:.0f}s -> {status}")
     return 1 if bad else 0
 
 

@@ -72,7 +72,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             return 0
 
         if args.validate_only:
-            from pyspark.sql import functions as F
+            from collections import Counter
+
+            from pyspark.sql import Observation, functions as F
 
             from .domains.articles import article_rules
             from .operators.validate import with_validation
@@ -80,28 +82,28 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             from .schema import RECORD_ID
             from .sources.articles_json import load_articles
 
-            flagged = with_validation(load_articles(spark, args.input), article_rules()).cache()
-            total = flagged.count()
-            passed = flagged.where(F.col("passed")).count()
-            failed = flagged.where(~F.col("passed"))
-            dist = [
-                (r["reason"], int(r["n"]))
-                for r in failed.groupBy("reason")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .orderBy(F.desc("n"), F.asc("reason"))
-                .collect()
-            ]
+            # one action: the failed rows are collected, the totals ride
+            # along as observed metrics
+            flagged = with_validation(load_articles(spark, args.input), article_rules())
+            obs = Observation()
+            failed = flagged.observe(
+                obs,
+                F.count(F.lit(1)).alias("total"),
+                F.sum(F.col("passed").cast("long")).alias("passed"),
+            ).where(~F.col("passed")).select(RECORD_ID, "reason", "message")
+            rows = sorted(failed.collect(), key=lambda r: r[0])
+            total, passed = int(obs.get["total"]), int(obs.get["passed"] or 0)
             details = [
                 {"index": int(r[RECORD_ID]), "reason": r["reason"], "message": r["message"]}
-                for r in failed.select(RECORD_ID, "reason", "message")
-                .orderBy(RECORD_ID)
-                .collect()
+                for r in rows
             ]
+            # count desc, ties in first-occurrence (record_id) order, as
+            # validator.py:155 and the pipeline report order them
             stats = ValidationStats(
                 total=total,
                 passed=passed,
                 failed=total - passed,
-                failure_reasons=dist,
+                failure_reasons=Counter(d["reason"] for d in details).most_common(),
                 failed_record_details=details,
             )
             print(render_validation_report(stats))

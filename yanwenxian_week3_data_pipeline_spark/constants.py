@@ -77,36 +77,10 @@ MISSING_DATE_LITERALS: tuple[str, ...] = ("none", "null", "nan")
 # Verified identical on both engines (probe 2026-08-13).
 HASH64_HEX_CHARS = 15
 
-# MinHash configuration (dedup family). The env overrides exist ONLY for
-# guarded A/B experiments (fresh interpreter per variant; both the Spark
-# expressions and the DuckDB oracle derive from these names, so a variant
-# stays self-consistent) — production value is the default. r9 A/B of
-# 32/8x4 vs 16-hash variants: see operators/dedup.py docstring.
-import os as _os
-
-MINHASH_NUM_HASHES = int(_os.environ.get("YWX_MINHASH_NUM_HASHES", "32"))
-MINHASH_BANDS = int(_os.environ.get("YWX_MINHASH_BANDS", "8"))  # 8 bands x 4 rows
-
-# Overrides are refused outside an explicit experiment flag, and their
-# presence is exported so bench/verify output can record the active values —
-# a stray variable left over from an A/B shell must not silently change
-# production signatures or certify a contaminated gate (ADVICE r9).
-MINHASH_OVERRIDE_ACTIVE = bool(
-    _os.environ.get("YWX_MINHASH_NUM_HASHES") or _os.environ.get("YWX_MINHASH_BANDS")
-)
-if MINHASH_OVERRIDE_ACTIVE and _os.environ.get("YWX_MINHASH_EXPERIMENT") != "1":
-    raise RuntimeError(
-        "YWX_MINHASH_NUM_HASHES/YWX_MINHASH_BANDS are set without "
-        "YWX_MINHASH_EXPERIMENT=1 — refusing to run with non-default MinHash "
-        f"signatures (num_hashes={MINHASH_NUM_HASHES}, bands={MINHASH_BANDS})"
-    )
-# A non-divisible combo would floor-truncate rows-per-band and silently drop
-# trailing hashes from banding.
-if MINHASH_NUM_HASHES % MINHASH_BANDS != 0:
-    raise RuntimeError(
-        f"MINHASH_NUM_HASHES ({MINHASH_NUM_HASHES}) must be divisible by "
-        f"MINHASH_BANDS ({MINHASH_BANDS})"
-    )
+# MinHash configuration (dedup family): 32 hashes in 8 bands of 4 rows.
+# r9 A/B of 32/8x4 vs 16-hash variants: see operators/dedup.py docstring.
+MINHASH_NUM_HASHES = 32
+MINHASH_BANDS = 8
 
 # LSH buckets larger than this are skipped by the band self-joins: a bucket
 # of b members contributes b^2/2 candidate pairs, so one boilerplate/empty-

@@ -58,6 +58,36 @@ def md5_split_exprs(col: Column) -> tuple[Column, Column]:
     return h1, h2
 
 
+def md5_split_np():
+    """Return ``split(data) -> (h1, h2)``, the numpy twin of
+    ``md5_split_exprs`` for the Arrow kernels: ``data`` is a list of byte
+    strings, h1 and h2 are int64 arrays.
+
+    Lemma: read ``md5(s).digest()`` as big-endian uint64 words (w0, w1).
+    Hex chars 1-15 are the top 60 bits of w0, so h1 = w0 >> 4; hex chars
+    16-29 are the low nibble of w0 followed by the top 52 bits of w1, so
+    h2 = ((w0 & 0xF) << 52) | (w1 >> 12). Both are < 2^63, so the int64
+    cast is exact. One buffer parse replaces two hexdigest int() loops.
+
+    Returned as a closure so Spark pickles it by value into the Python
+    workers, which need not be able to import this package."""
+    import hashlib
+
+    import numpy as np
+
+    # uint64 shift counts: NumPy 1.x mixes uint64 with a Python int as float
+    s4, s12, s52, low4 = (np.uint64(x) for x in (4, 12, 52, 0xF))
+
+    def split(data: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
+        digests = b"".join([hashlib.md5(s).digest() for s in data])
+        w = np.frombuffer(digests, dtype=">u8").reshape(-1, 2)
+        h1 = (w[:, 0] >> s4).astype(np.int64)
+        h2 = (((w[:, 0] & low4) << s52) | (w[:, 1] >> s12)).astype(np.int64)
+        return h1, h2
+
+    return split
+
+
 def md5_split_sql(digest_expr: str) -> tuple[str, str]:
     """DuckDB twin of ``md5_split_exprs`` over an already-computed digest
     column/expression (stage the ``md5(s)`` list once; inlining it would

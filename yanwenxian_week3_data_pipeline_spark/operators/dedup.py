@@ -39,7 +39,7 @@ from ..constants import (
     MINHASH_SHINGLE_K,
     SIMHASH_BITS,
 )
-from ..functions.hashing import hash60_expr, km_hash_expr, md5_split_exprs
+from ..functions.hashing import hash60_expr, km_hash_expr, md5_split_exprs, md5_split_np
 from ..functions.text import clean_text_expr
 from ..functions.textstats import tokens_expr
 
@@ -210,8 +210,6 @@ def _minhash_sig_table(sh: DataFrame) -> DataFrame:
     shingles): 3.44 s → 1.62 s for the signature table (2.1×), identical
     output. hashlib.md5 per shingle stays a C call; the Arrow transfer
     moves only (id, shingles) in and 32 longs per doc out."""
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
@@ -219,6 +217,7 @@ def _minhash_sig_table(sh: DataFrame) -> DataFrame:
 
     p = MINHASH_PRIME
     iv = np.arange(MINHASH_NUM_HASHES, dtype=np.int64)
+    md5_split = md5_split_np()
 
     def kernel(iterator):
         for pdf in iterator:
@@ -226,9 +225,7 @@ def _minhash_sig_table(sh: DataFrame) -> DataFrame:
             for did, shingles in zip(pdf["id"], pdf["shingles"]):
                 if shingles is None or len(shingles) == 0:
                     continue
-                digs = [hashlib.md5(s.encode()).hexdigest() for s in shingles]
-                h1 = np.array([int(d[:15], 16) for d in digs], dtype=np.int64)
-                h2 = np.array([int(d[15:29], 16) for d in digs], dtype=np.int64)
+                h1, h2 = md5_split([s.encode() for s in shingles])
                 g = (h1[:, None] + (iv[None, :] * h2[:, None]) % p) % p
                 ids.append(did)
                 sigs.append([int(x) for x in g.min(axis=0)])
@@ -272,8 +269,7 @@ def dedup_minhash_lsh(
     +verify 2.65 s.
 
     r9 — FLOOR DECLARED after the last open variant was tried: lowering
-    MINHASH_NUM_HASHES 32→16 (both 8×2 and 4×4 band shapes, fresh
-    interpreter per variant via the YWX_MINHASH_* env knobs, two session
+    MINHASH_NUM_HASHES 32→16 (both 8×2 and 4×4 band shapes, two session
     rounds each at sf0.1) was a wall-time WASH (round 1: 3.46/3.29/3.23 s
     for 32-8×4/16-8×2/16-4×4; round 2 INVERTED the ordering: 3.17/3.26 s
     with the 16-4×4 session load-contaminated) and a measured RECALL LOSS
@@ -638,7 +634,7 @@ def dedup_containment(
     while forfeiting the exact n_rare the full self-join's groupBy
     produces for free, forcing a recount join for ~466 k pairs that
     costs more than the emission it saves. Numbers + lemma:
-    tools/prefix_filter_counts.py.
+    OPTIMIZATION_r11.md.
     """
     sh = doc_shingles(df, text_col, id_col)
     posts = sh.select("id", F.explode("shingles").alias("s"))

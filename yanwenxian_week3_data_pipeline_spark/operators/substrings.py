@@ -111,7 +111,7 @@ def _lcp_tokens(a, b):
 # enough that natural-text suffix blocks stay small relative to the
 # corpus, short enough that blocks rarely become singletons (which would
 # push all pairs to the level-2 boundary window).
-# r11 SWEEP (tools/lrs_width_sweep.py, interleaved 4/8/12, identical
+# r11 SWEEP (OPTIMIZATION_r11.md, interleaved 4/8/12, identical
 # results asserted, 6 rounds each scale) — DO NOT RE-SWEEP without new
 # evidence: sf0.1 medians 0.909/0.788/0.851 s, sf1 4.378/3.916/3.910 s.
 # 8 and 12 are a dead wash at sf1 and 8 wins at sf0.1; 4 loses at both

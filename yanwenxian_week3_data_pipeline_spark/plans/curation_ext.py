@@ -56,7 +56,7 @@ from ..constants import (
     DSIR_SEED,
     DSIR_TARGET_LANG,
 )
-from ..functions.hashing import hash52_expr, hash52_sql, hash60_expr, hash60_sql
+from ..functions.hashing import hash52_expr, hash52_sql, hash60_expr, hash60_sql, md5_split_np
 from ..functions.text import clean_text_expr
 from ..functions.textstats import (
     quality_features_expr,
@@ -183,17 +183,16 @@ def _winnow_fps_table(d: DataFrame) -> DataFrame:
     is an interpreted O(n·w) array_min-over-slices HOF per document —
     Catalyst does not codegen higher-order-function lambdas — and it
     dominated the committed wall. Measured interleaved ×6, results
-    bit-identical (tools/proto_winnow_arrow.py): sf0.1 2.628 → 0.384 s
+    bit-identical (OPTIMIZATION_r11.md): sf0.1 2.628 → 0.384 s
     (−85 %), sf1 8.227 → 1.640 s (−80 %). Tokenization stays a Spark
     expression so cleaning is shared with every other text operator; the
     transfer in is (doc_id, toks) only, out is two longs per fingerprint.
     """
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
     K, W, seed = WINNOW_GRAM_K, WINNOW_WINDOW, WINNOW_HASH_SEED
+    md5_split = md5_split_np()
 
     def kernel(batches):
         pre = f"{seed}:".encode()
@@ -203,19 +202,8 @@ def _winnow_fps_table(d: DataFrame) -> DataFrame:
                 n = len(toks)
                 if n < K:
                     continue
-                h = np.fromiter(
-                    (
-                        int(
-                            hashlib.md5(
-                                pre + " ".join(toks[i : i + K]).encode()
-                            ).hexdigest()[:15],
-                            16,
-                        )
-                        for i in range(n - K + 1)
-                    ),
-                    dtype=np.int64,
-                    count=n - K + 1,
-                )
+                grams = [pre + " ".join(toks[i : i + K]).encode() for i in range(n - K + 1)]
+                h = md5_split(grams)[0]
                 if len(h) < W:
                     continue
                 mins = np.lib.stride_tricks.sliding_window_view(h, W).min(axis=1)

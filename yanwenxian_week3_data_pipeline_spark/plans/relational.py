@@ -84,7 +84,7 @@ def _t_shuffle_input(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     work dominates and the fan-out is the measured WIN (r4: q1 5.9 →
     2.9 s at sf1) — the decision is per-consumer, not per-table.
 
-    r10 propagation A/Bs (tools/ab_loader.py, interleaved, warm medians,
+    r10 propagation A/Bs (OPTIMIZATION_r10.md, interleaved, warm medians,
     plain vs fanout): q3 sf0.1 1.103 vs 1.527, sf1 2.418 vs 4.643; q5
     sf0.1 1.136 vs 1.699, sf1 2.131 vs 8.820 (the fan-out's full exchange
     of unfiltered lineitem was a 4.1x loss); q18 sf1 7.629 vs 10.995 —

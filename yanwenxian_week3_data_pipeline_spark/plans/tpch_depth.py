@@ -209,7 +209,7 @@ def _q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # lineitem is plain too: broadcast probes are a hash lookup per row,
     # not q1-class map work, and the o_orderkey shuffle follows — r10
-    # interleaved A/B (tools/ab_loader.py): plain 2.255 vs fanout 8.474 s
+    # interleaved A/B (OPTIMIZATION_r10.md): plain 2.255 vs fanout 8.474 s
     # at sf1 (-73%; the fan-out exchanged the unfiltered full-width
     # table), 1.479 vs 2.025 at sf0.1
     li = _t_shuffle_input(spark, sf_dir, "lineitem")
@@ -283,7 +283,7 @@ def _q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inputs; the orders side ships year(o_orderdate) (int) instead of the
     # timestamp. Decimal arithmetic is per-row and exact, so evaluating it
     # before or after the join is the same function — results asserted
-    # identical. Interleaved A/B (tools/proto_q9_narrow.py): sf1 3.677 →
+    # identical. Interleaved A/B (OPTIMIZATION_r11.md): sf1 3.677 →
     # 3.237 s (−12 %, won 6/6 pairwise), sf0.1 0.674 → 0.619 s (−8 %).
     orders = _t_shuffle_input(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year")

@@ -297,7 +297,7 @@ def _q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact decimal product (27,0)×(2,1). The shuffle row drops from a
     # 16-byte non-compact decimal(28,1) buffer to an 8-byte long, and the
     # agg codegen works in long arithmetic. Results asserted identical
-    # (tools/proto_q18_narrow.py; the top-level decimal is canonicalized
+    # (OPTIMIZATION_r11.md; the top-level decimal is canonicalized
     # to double either way). Interleaved A/B, fully separated samples both
     # scales: sf1 4.158 → 3.159 s (−24 %), sf0.1 0.667 → 0.517 s (−22 %).
     scaled = (F.col("l_quantity").cast("decimal(18,1)") * 10).cast("long")
