@@ -54,13 +54,12 @@ def summarize(xs: list[float]) -> dict:
 
 
 def verdict(a: list[float], b: list[float]) -> dict:
-    sa, sb = summarize(a), summarize(b)
     wins = sum(y < x for x, y in zip(a, b))
-    gap = statistics.median(a) - statistics.median(b)
-    iqr_a = sa["q3"] - sa["q1"]
+    q1, med_a, q3 = statistics.quantiles(a, n=4, method="inclusive")
+    gap, iqr_a = med_a - statistics.median(b), q3 - q1
     return {
-        "a": sa,
-        "b": sb,
+        "a": summarize(a),
+        "b": summarize(b),
         "b_wins": wins,
         "pairs": len(a),
         "claim_holds": 10 * wins >= 9 * len(a) and gap > iqr_a,
