@@ -43,21 +43,30 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (0, 2) not in pairs                       # reordered text: shingles differ
 
 
-def test_minhash_sig_arrow_matches_expression(spark):
-    """The Arrow signature kernel must be bit-identical to the native-
-    expression reference (the recipe the DuckDB oracle replays): same
-    md5-split (h1, h2), same exact-int64 KM arithmetic, same mins."""
+def test_minhash_sig_arrow_matches_expression(spark, sf_dir):
+    """The Arrow signature kernel must be bit-identical to the per-row
+    expression reference (the recipe the streams run and the DuckDB oracle
+    replays): same md5-split (h1, h2), same exact-int64 KM arithmetic,
+    same mins — on the constructed near-dups and on the documents table."""
     from yanwenxian_week3_data_pipeline_spark.operators.dedup import (
         _minhash_sig_table,
-        _minhash_sig_table_expr,
         doc_shingles,
+        minhash_sig_row_expr,
     )
 
-    docs = _docs_with_near_dups(spark)
-    sh = doc_shingles(docs, "text", "doc_id")
-    arrow = {r["id"]: list(r["sig"]) for r in _minhash_sig_table(sh).collect()}
-    expr = {r["id"]: list(r["sig"]) for r in _minhash_sig_table_expr(sh).collect()}
+    def both(docs):
+        sh = doc_shingles(docs, "text", "doc_id").where(F.size("shingles") > 0)
+        arrow = {r["id"]: list(r["sig"]) for r in _minhash_sig_table(sh).collect()}
+        expr = {
+            r["id"]: list(r["sig"])
+            for r in sh.select("id", minhash_sig_row_expr(F.col("shingles")).alias("sig")).collect()
+        }
+        return arrow, expr
+
+    arrow, expr = both(_docs_with_near_dups(spark))
     assert arrow == expr and len(arrow) == 5
+    arrow, expr = both(spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text"))
+    assert arrow == expr and len(arrow) > 0
 
 
 def test_simhash_near_dups(spark):

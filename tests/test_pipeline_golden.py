@@ -252,25 +252,30 @@ def test_report_metrics_observed_above_last_exchange(spark, fixture_path):
     assert kept_filter < first("CollectMetrics") < first("Exchange")
 
 
-def test_load_articles_single_document_ids_without_shuffle(spark, fixture_path):
+def test_load_articles_single_document_ids_without_shuffle(spark, fixture_path, tmp_path):
     """A multiLine document is one partition, so monotonically_increasing_id
-    already is the dense file-order position: no window, no _pid shuffle."""
+    already is the dense file-order position: no window, no _pid shuffle,
+    and no sort for the {"articles": [...]} wrapper either."""
     import contextlib
     import io
 
     from yanwenxian_week3_data_pipeline_spark.sources.articles_json import load_articles
 
-    df = load_articles(spark, fixture_path)
+    wrapped = tmp_path / "wrapped_articles.json"
+    wrapped.write_text(json.dumps({"articles": _fixture_records()}, indent=2), encoding="utf-8")
     titles = [r["title"] for r in _fixture_records()]
-    rows = sorted(df.select("record_id", "title").collect())
-    assert [r.record_id for r in rows] == list(range(17))
-    assert [r.title for r in rows] == titles
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain()
-    plan = buf.getvalue()
-    assert "Window" not in plan
-    assert "hashpartitioning(_pid" not in plan
+    for path in (fixture_path, str(wrapped)):
+        df = load_articles(spark, path)
+        rows = sorted(df.select("record_id", "title").collect())
+        assert [r.record_id for r in rows] == list(range(17)), path
+        assert [r.title for r in rows] == titles, path
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain()
+        plan = buf.getvalue()
+        assert "Window" not in plan, path
+        assert "hashpartitioning(_pid" not in plan, path
+        assert "Sort" not in plan, path
 
 
 def test_envelope_shapes(spark, tmp_path_factory):

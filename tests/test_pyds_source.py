@@ -39,18 +39,71 @@ def feed_dir(tmp_path_factory) -> Path:
     return d
 
 
-@pytest.mark.skipif(not REF_SAMPLE.exists(), reason="reference fixture not present")
-def test_pyds_matches_multiline_reader_on_reference_fixture(spark):
+def _repo_fixture(tmp_path_factory) -> Path:
+    from tests.test_pipeline_golden import _fixture_records
+
+    p = tmp_path_factory.mktemp("pyds_parity") / "dirty_articles.json"
+    p.write_text(json.dumps(_fixture_records(), indent=2), encoding="utf-8")
+    return p
+
+
+def _reference_sample(tmp_path_factory) -> Path:
+    if not REF_SAMPLE.exists():
+        pytest.skip("reference fixture not present")
+    return REF_SAMPLE
+
+
+@pytest.mark.parametrize(
+    "make_input", [_repo_fixture, _reference_sample], ids=["repo_fixture", "reference_sample"]
+)
+def test_pyds_matches_multiline_reader(spark, tmp_path_factory, make_input):
     from yanwenxian_week3_data_pipeline_spark.schema import ARTICLE_COLUMNS, RECORD_ID, conform
     from yanwenxian_week3_data_pipeline_spark.sources.articles_json import load_articles
     from yanwenxian_week3_data_pipeline_spark.sources.articles_pyds import load_articles_pyds
 
+    path = str(make_input(tmp_path_factory))
     cols = [RECORD_ID, *ARTICLE_COLUMNS]
-    via_json = load_articles(spark, str(REF_SAMPLE)).select(*cols).collect()
-    via_pyds = conform(load_articles_pyds(spark, str(REF_SAMPLE))).select(*cols).collect()
+    via_json = load_articles(spark, path).select(*cols).collect()
+    via_pyds = conform(load_articles_pyds(spark, path)).select(*cols).collect()
+    assert len(via_json) > 0
     assert sorted(via_pyds) == sorted(via_json)
     # single file → file_seq 0 → record_id reduces to 0..n-1 ingest order
     assert sorted(r[RECORD_ID] for r in via_pyds) == list(range(len(via_pyds)))
+
+
+def test_pyds_reads_where_workers_cannot_import_the_package(tmp_path):
+    """A driver started in another directory with no PYTHONPATH has the
+    package only on its own sys.path; its Python workers cannot import it,
+    so the source's reader code must travel with the pickled class."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.test_pipeline_golden import _fixture_records
+
+    src = tmp_path / "articles.json"
+    src.write_text(json.dumps(_fixture_records(), indent=2), encoding="utf-8")
+    repo = Path(__file__).resolve().parent.parent
+    script = f"""
+import sys
+sys.path.insert(0, {str(repo)!r})
+from yanwenxian_week3_data_pipeline_spark.session import get_spark
+from yanwenxian_week3_data_pipeline_spark.sources.articles_pyds import (
+    ArticlesEnvelopeDataSource,
+    load_articles_pyds,
+)
+spark = get_spark("pyds-outside-repo", shuffle_partitions=2)
+spark.dataSource.register(ArticlesEnvelopeDataSource)
+print("DIRECT", spark.read.format("articles_envelope").load({str(src)!r}).count())
+print("LOADER", load_articles_pyds(spark, {str(src)!r}).count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "DIRECT 17" in proc.stdout and "LOADER 17" in proc.stdout, proc.stderr[-3000:]
 
 
 def test_pyds_directory_partitions_and_envelopes(spark, feed_dir):

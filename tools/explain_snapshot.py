@@ -1,8 +1,9 @@
 """Dump `.explain("formatted")` for registered queries, one file per query.
 
-Used to produce the r10 before/after plan evidence (plans/r10/): run once at
-the round-9 baseline commit (worktree) and once at HEAD, then diff with
-expression IDs normalized to find every query whose physical plan changed.
+Run it once on each of two checkouts and `diff -r` the two output
+directories: the ids a build draws from session-wide counters are
+renumbered on write (``normalize``), so the diff is empty exactly when the
+physical plans match.
 
 Usage: python tools/explain_snapshot.py <sf_dir> <outdir> [name ...]
   With no names, snapshots every registered query.
@@ -12,10 +13,36 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+# Session-counter ids: expression ids `#N`, exchange `[plan_id=N]`, the RDD
+# id of a checkpointed scan (`MapPartitionsRDD[N]`) and PySpark lambda
+# variables (`x_N`). An HTML entity literal such as `&#39;` is not an id.
+_SESSION_IDS = [
+    re.compile(r"(?P<pre>(?<!&)#)(?P<n>\d+)"),
+    re.compile(r"(?P<pre>\[plan_id=)(?P<n>\d+)"),
+    re.compile(r"(?P<pre>RDD\[)(?P<n>\d+)"),
+    re.compile(r"(?P<pre>\blambda [a-z]+_)(?P<n>\d+)"),
+]
+
+
+def normalize(plan: str) -> str:
+    """Renumber each kind of session-counter id in order of first
+    appearance. Two builds of one plan then print the same text, while
+    distinct ids stay distinct and every other character is kept."""
+    for pattern in _SESSION_IDS:
+        seen: dict[tuple[str, str], int] = {}
+
+        def renumber(m: re.Match) -> str:
+            key = (m["pre"], m["n"])
+            return f"{m['pre']}{seen.setdefault(key, len(seen))}"
+
+        plan = pattern.sub(renumber, plan)
+    return plan
 
 
 def main() -> None:
@@ -40,7 +67,7 @@ def main() -> None:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain(mode="formatted")
-            (outdir / f"{name}.txt").write_text(buf.getvalue())
+            (outdir / f"{name}.txt").write_text(normalize(buf.getvalue()))
         except Exception as e:  # streaming/env-gated queries may not build here
             failed.append((name, repr(e)))
     if failed:

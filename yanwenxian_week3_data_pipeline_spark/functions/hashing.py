@@ -45,23 +45,22 @@ def hash52_sql(expr: str, seed: int | None = None) -> str:
     return f"(('0x' || substr(md5({s}), 1, 13))::BIGINT)"
 
 
-def md5_split_exprs(col: Column) -> tuple[Column, Column]:
-    """(h1, h2) Kirsch-Mitzenmacher base hashes from ONE md5 digest:
-    h1 = hex chars 1-15 (60 bits), h2 = hex chars 16-29 (56 bits). Disjoint
-    halves of a single digest are independent hash values, so one md5 per
-    shingle replaces the two seeded calls (hashing is the dominant cost of
-    the signature stage; whole-stage codegen's subexpression elimination
-    computes the shared md5 once)."""
-    d = F.md5(col)
-    h1 = F.conv(F.substring(d, 1, HASH64_HEX_CHARS), 16, 10).cast("long")
-    h2 = F.conv(F.substring(d, 16, 14), 16, 10).cast("long")
+def md5_split_exprs(digest: Column) -> tuple[Column, Column]:
+    """(h1, h2) Kirsch-Mitzenmacher base hashes from ONE md5 hex digest
+    column: h1 = hex chars 1-15 (60 bits), h2 = hex chars 16-29 (56 bits).
+    Disjoint halves of a single digest are independent hash values, so one
+    md5 per shingle replaces two seeded calls. Takes the digest, not the
+    string, so a caller can bind ``md5(s)`` once and split it in every
+    hash fold, as ``md5_split_sql`` does."""
+    h1 = F.conv(F.substring(digest, 1, HASH64_HEX_CHARS), 16, 10).cast("long")
+    h2 = F.conv(F.substring(digest, 16, 14), 16, 10).cast("long")
     return h1, h2
 
 
 def md5_split_np():
     """Return ``split(data) -> (h1, h2)``, the numpy twin of
-    ``md5_split_exprs`` for the Arrow kernels: ``data`` is a list of byte
-    strings, h1 and h2 are int64 arrays.
+    ``md5_split_exprs(md5(s))`` for the Arrow kernels: ``data`` is a list
+    of byte strings, h1 and h2 are int64 arrays.
 
     Lemma: read ``md5(s).digest()`` as big-endian uint64 words (w0, w1).
     Hex chars 1-15 are the top 60 bits of w0, so h1 = w0 >> 4; hex chars

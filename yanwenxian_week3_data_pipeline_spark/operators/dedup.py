@@ -19,11 +19,14 @@
   verify stage exposed standalone).
 
 All computation is native Column expressions (higher-order array functions),
-with ONE deliberate exception: the minhash signature table's default path is
-an Arrow/numpy kernel (``_minhash_sig_table``) — dense per-row numeric work
-is the narrow case where Arrow beats codegen'd expression aggregates
-(measured 2.1×/1.8× at sf0.1/sf1) — bit-identical to the expression
-reference ``_minhash_sig_table_expr`` that the DuckDB oracle replays.
+with ONE deliberate exception: the minhash signature table is an Arrow/numpy
+kernel (``_minhash_sig_table``) — dense per-row numeric work is the narrow
+case where Arrow beats codegen'd expression aggregates (measured 2.1×/1.8×
+at sf0.1/sf1). It is bit-identical to ``minhash_sig_row_expr``, the one
+expression form of the signature: the candidate streams
+(streaming/neardup.py) run it, and the DuckDB oracle's ``_minhash_sig_sql``
+(plans/llm_ops.py) is its SQL twin. ``minhash_band_keys`` is the one band
+key recipe for batch and stream.
 """
 
 from __future__ import annotations
@@ -143,23 +146,12 @@ def doc_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, shingles, sig: array<long>[num_hashes]).
 
-    sig_i = min over shingles of the seed-i 60-bit md5 hash; MAXLONG
-    sentinel for empty shingle sets.
-
-    Execution shape: explode the materialized shingles → ONE md5 per
-    shingle, split into the (h1, h2) Kirsch-Mitzenmacher base pair
-    (``md5_split_exprs``) → groupBy(id) with ``num_hashes`` codegen'd
-    min(g_i) aggregates → reassemble the array. Earlier
-    shapes measured slower at sf0.1:
-    - array-lambda (array_min∘transform): HOFs are interpreted, and
-      CollapseProject re-inlines the whole clean→tokenize→shingle pipeline
-      into every one of the 32 signature expressions;
-    - 32 independently-seeded md5s: ~2× the hashing cost of the KM family;
-    - one-md5 + exact (a·h+b) mod p universal family: the 122-bit products
-      need DECIMAL(38,0) and BigDecimal arithmetic costs ~µs/op, 3-4× an
-      extra md5.
-    A document's shingles are colocated, so map-side partial aggregation
-    collapses each doc to one row before the shuffle."""
+    sig_i = min over shingles of g_i = (h1 + i·h2) mod (2^61−1), with
+    (h1, h2) split from one md5 per shingle (``minhash_sig_row_expr``);
+    every position is ``MINHASH_EMPTY_SENTINEL`` for an empty shingle set.
+    The signatures come from the Arrow kernel ``_minhash_sig_table`` and
+    are left-joined back onto the shingle frame, so empty-shingle docs keep
+    a row."""
     sh = doc_shingles(df, text_col, id_col)
     sigs = _minhash_sig_table(sh)
     sentinel = F.array(*[F.lit(MINHASH_EMPTY_SENTINEL).cast("long")] * MINHASH_NUM_HASHES)
@@ -168,48 +160,52 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _minhash_sig_table_expr(sh: DataFrame) -> DataFrame:
-    """(id, sig) from a (id, shingles) frame — NATIVE-EXPRESSION path,
-    kept as the oracle-parity reference (_minhash_sig_sql in
-    plans/llm_ops.py replays exactly this recipe) and as the
-    cross-implementation check for the Arrow kernel below
-    (tests/test_operators.py asserts table equality). Docs with empty
-    shingle sets drop out at the explode (callers needing them re-join
-    with the sentinel). Small: num_hashes longs per doc."""
-    h1, h2 = md5_split_exprs(F.col("s"))
-    hashed = sh.select("id", F.explode("shingles").alias("s")).select(
-        "id", h1.alias("h1"), h2.alias("h2")
-    )
-    aggs = [
-        F.min(km_hash_expr(F.col("h1"), F.col("h2"), i)).alias(f"_m{i}")
-        for i in range(MINHASH_NUM_HASHES)
-    ]
-    return hashed.groupBy("id").agg(*aggs).select(
-        "id", F.array(*[F.col(f"_m{i}") for i in range(MINHASH_NUM_HASHES)]).alias("sig")
-    )
+def minhash_sig_row_expr(shingles: Column, num: int = MINHASH_NUM_HASHES) -> Column:
+    """array<long>[num] MinHash signature of one row's shingle array — the
+    expression form of the recipe: one md5 per shingle, split into the
+    Kirsch-Mitzenmacher pair (``md5_split_exprs``), sig_i = min over the
+    shingles of ``km_hash_expr(h1, h2, i)``. The digest list is let-bound
+    (``transform(array(ds), λ)[0]``), so the ``num`` folds share one md5
+    per shingle. An empty shingle array gives nulls; callers drop it.
+
+    Per-row and stateless, so a stream can run it with no shuffle; the
+    batch path runs the Arrow kernel ``_minhash_sig_table``, which is
+    tested bit-equal to this expression."""
+    digests = F.transform(shingles, lambda s: F.md5(s))
+    return F.transform(
+        F.array(digests),
+        lambda ds: F.array(
+            *[
+                F.array_min(F.transform(ds, lambda d: km_hash_expr(*md5_split_exprs(d), i)))
+                for i in range(num)
+            ]
+        ),
+    )[0]
 
 
 def _minhash_sig_table(sh: DataFrame) -> DataFrame:
-    """(id, sig) — Arrow/numpy kernel (the default signature path).
+    """(id, sig) from a (id, shingles) frame — Arrow/numpy kernel (the
+    batch signature path); empty-shingle docs dropped.
 
-    Same contract as ``_minhash_sig_table_expr``: one md5 per shingle,
-    (h1, h2) = disjoint 60/56-bit halves of the digest, g_i = (h1 + i·h2)
-    mod (2^61−1), sig_i = min over shingles; empty-shingle docs dropped.
-    The arithmetic is EXACT int64 in both implementations (products
-    ≤ 31·2^56 < 2^61, sums < 2^62 — no float anywhere), and md5 is md5,
-    so the tables are bit-identical — verified by the cross-impl unit
-    test and continuously by the oracle sweep, whose DuckDB twin replays
-    the expression recipe.
+    Per doc it equals ``minhash_sig_row_expr(shingles)``: the same md5
+    split (``md5_split_np`` is the numpy twin of ``md5_split_exprs``) and
+    the same EXACT int64 arithmetic (products ≤ 31·2^56 < 2^61, sums
+    < 2^62 — no float anywhere), so the tables are bit-identical —
+    verified by the cross-impl unit test and continuously by the oracle
+    sweep, whose DuckDB twin replays the expression recipe.
 
     Why Arrow here (the banding-matmul lesson from operators/similarity
     .py): the signature stage is a dense per-row numeric kernel — 32
     modular hashes × every shingle, then a 32-way min. As native
-    expressions that is 32 codegen'd aggregates over an exploded
-    shingle stream; as a numpy batch it is one (n_shingles × 32) outer
-    product and a column-min per doc. Measured at sf0.1 (5k docs, 260k
+    expressions (the retired explode + groupBy shape) that is 32 codegen'd
+    aggregates over an exploded shingle stream; as a numpy batch it is one
+    (n_shingles × 32) outer product and a column-min per doc. Measured at sf0.1 (5k docs, 260k
     shingles): 3.44 s → 1.62 s for the signature table (2.1×), identical
     output. hashlib.md5 per shingle stays a C call; the Arrow transfer
-    moves only (id, shingles) in and 32 longs per doc out."""
+    moves only (id, shingles) in and 32 longs per doc out. Hashing in
+    Catalyst and shipping only (id, h1, h2) to Arrow for the min lost:
+    dedup_minhash_lsh 3.80 → 4.97 s median, 1 of 10 wins (sf0.1, 4 cores,
+    tools/ab.py; CHANGES.md)."""
     import numpy as np
     import pandas as pd
 
@@ -460,7 +456,10 @@ def minhash_band_keys(
     rows_per_band: int = MINHASH_ROWS_PER_BAND,
 ) -> DataFrame:
     """(id, band_idx, band_key) — explode a signature frame to its LSH band
-    keys (md5 over the band's signature slice, same recipe as the oracle)."""
+    keys: md5 over each band's comma-joined signature slice, the recipe
+    ``_band_key_sql`` replays. Every column but ``sig`` rides along, so the
+    watermarked stream keeps its event time on each band row."""
+    keep = [c for c in sigs.columns if c != "sig"]
     band_structs = F.array(
         *[
             F.struct(
@@ -475,8 +474,8 @@ def minhash_band_keys(
             for b in range(bands)
         ]
     )
-    return sigs.select("id", F.explode(band_structs).alias("band")).select(
-        "id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key")
+    return sigs.select(*keep, F.explode(band_structs).alias("band")).select(
+        *keep, F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key")
     )
 
 

@@ -61,6 +61,7 @@ from ..functions.vectors import (
     norm_sql,
 )
 from ..operators.dedup import (
+    MINHASH_EMPTY_SENTINEL,
     dedup_exact,
     dedup_minhash_lsh,
     dedup_simhash,
@@ -311,23 +312,26 @@ def _shingles_sql_inline(c: str, k: int = MINHASH_SHINGLE_K) -> str:
     )
 
 
-_SENTINEL = 2**62
-
-
-def _minhash_digests_sql(shingles_col: str) -> str:
-    # ONE md5 per shingle, staged as a list column; _minhash_sig_sql splits
-    # each digest into the (h1, h2) KM base pair (functions/hashing.py
-    # md5_split_sql) — same recipe as operators/dedup.py minhash_signatures.
-    return f"list_transform({shingles_col}, s -> md5(s))"
-
-
 def _minhash_sig_sql(digests_col: str, num: int = MINHASH_NUM_HASHES) -> str:
+    """SQL twin of operators/dedup.py ``minhash_sig_row_expr`` over a
+    staged md5 digest list: split each digest into the (h1, h2) KM pair
+    (``md5_split_sql``) and take the per-hash min."""
     h1, h2 = md5_split_sql("dg")
     mins = ", ".join(
-        f"coalesce(list_min(list_transform({digests_col}, dg -> {km_hash_sql(h1, h2, i)})), {_SENTINEL})"
+        f"list_min(list_transform({digests_col}, dg -> {km_hash_sql(h1, h2, i)}))"
         for i in range(num)
     )
     return f"[{mins}]"
+
+
+# d → sh → hashed → sigs: the one oracle chain of every MinHash query. ONE
+# md5 per shingle is staged as a list (ds) before the num_hashes folds.
+# Docs without a shingle have no signature row, as in the Arrow kernel.
+_MINHASH_SIGS_CTES = f"""d AS ({_CLEANED}),
+sh AS (SELECT doc_id, {_shingles_sql_inline('c')} AS shingles FROM d),
+hashed AS (SELECT doc_id, shingles, list_transform(shingles, s -> md5(s)) AS ds
+           FROM sh WHERE len(shingles) > 0),
+sigs AS (SELECT doc_id, shingles, {_minhash_sig_sql('ds')} AS sig FROM hashed)"""
 
 
 def _q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,10 +341,9 @@ def _q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_MINHASH_SIG = f"""
-WITH d AS ({_CLEANED}),
-sh AS (SELECT doc_id, {_shingles_sql_inline('c')} AS shingles FROM d),
-hashed AS (SELECT doc_id, {_minhash_digests_sql('shingles')} AS ds FROM sh)
-SELECT doc_id, {_minhash_sig_sql('ds')} AS sig FROM hashed
+WITH {_MINHASH_SIGS_CTES}
+SELECT d.doc_id, coalesce(sigs.sig, {[MINHASH_EMPTY_SENTINEL] * MINHASH_NUM_HASHES}) AS sig
+FROM d LEFT JOIN sigs USING (doc_id)
 """
 
 
@@ -360,10 +363,7 @@ _band_structs = ", ".join(
 )
 
 _SQL_DEDUP_MINHASH = f"""
-WITH d AS ({_CLEANED}),
-sh AS (SELECT doc_id, {_shingles_sql_inline('c')} AS shingles FROM d),
-hashed AS (SELECT doc_id, shingles, {_minhash_digests_sql('shingles')} AS ds FROM sh WHERE len(shingles) > 0),
-sigs AS (SELECT doc_id, shingles, {_minhash_sig_sql('ds')} AS sig FROM hashed),
+WITH {_MINHASH_SIGS_CTES},
 banded_all AS (SELECT doc_id, u.band_idx AS band_idx, u.band_key AS band_key
            FROM sigs, UNNEST([{_band_structs}]) AS t(u)),
 ok_buckets AS (SELECT band_idx, band_key FROM banded_all
@@ -425,10 +425,7 @@ def _q_minhash_est_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_MINHASH_EST_GATE = f"""
-WITH d AS ({_CLEANED}),
-sh AS (SELECT doc_id, {_shingles_sql_inline('c')} AS shingles FROM d),
-hashed AS (SELECT doc_id, shingles, {_minhash_digests_sql('shingles')} AS ds FROM sh WHERE len(shingles) > 0),
-sigs AS (SELECT doc_id, shingles, {_minhash_sig_sql('ds')} AS sig FROM hashed),
+WITH {_MINHASH_SIGS_CTES},
 pairs AS (SELECT doc_a, doc_b, jaccard FROM ({_SQL_DEDUP_MINHASH}))
 SELECT p.doc_a, p.doc_b, p.jaccard,
   round(CAST(len(list_filter(range(1, {MINHASH_NUM_HASHES + 1}),
@@ -2064,10 +2061,7 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_DEDUP_INCREMENTAL = f"""
-WITH d AS ({_CLEANED}),
-sh AS (SELECT doc_id, {_shingles_sql_inline('c')} AS shingles FROM d),
-hashed AS (SELECT doc_id, shingles, {_minhash_digests_sql('shingles')} AS ds FROM sh WHERE len(shingles) > 0),
-sigs AS (SELECT doc_id, shingles, {_minhash_sig_sql('ds')} AS sig FROM hashed),
+WITH {_MINHASH_SIGS_CTES},
 banded AS (SELECT doc_id, u.band_idx AS band_idx, u.band_key AS band_key
            FROM sigs, UNNEST([{_band_structs}]) AS t(u)),
 corpus_ok AS (SELECT band_idx, band_key FROM banded WHERE doc_id % 10 <> 0

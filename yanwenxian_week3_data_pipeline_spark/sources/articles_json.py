@@ -79,16 +79,16 @@ def load_articles(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql.types import ArrayType, StructType
 
     if "articles" in cols and isinstance(raw.schema["articles"].dataType, ArrayType):
-        # {"articles": [...]} wrapper — posexplode keeps the array position
-        # so ingest order stays deterministic. A NON-list "articles" value
-        # falls through: the reference (cleaner.py:137-142) wraps the whole
-        # dict as one record in that case, same as the bare-object shape.
-        # A list holding no objects ([] infers as array<string>) has no
-        # article records.
+        # {"articles": [...]} wrapper. The explode emits the array in order
+        # inside the document's one partition, so _with_record_id numbers
+        # the records in file order with no sort. A NON-list "articles"
+        # value falls through: the reference (cleaner.py:137-142) wraps the
+        # whole dict as one record in that case, same as the bare-object
+        # shape. A list holding no objects ([] infers as array<string>) has
+        # no article records.
         if not isinstance(raw.schema["articles"].dataType.elementType, StructType):
             return _empty(spark)
-        arr = raw.select(F.posexplode_outer("articles").alias("_pos", "_a"))
-        df = arr.select(F.col("_pos"), F.col("_a.*")).sort("_pos").drop("_pos")
+        df = raw.select(F.explode_outer("articles").alias("_a")).select("_a.*")
     else:
         # top-level array and bare single object both land here
         # (spark.read.json handles either as rows)

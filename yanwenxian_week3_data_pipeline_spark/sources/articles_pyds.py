@@ -30,8 +30,10 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 from typing import Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
@@ -41,6 +43,12 @@ from pyspark.sql.datasource import (
 )
 
 from ..schema import ARTICLE_COLUMNS, RECORD_ID
+
+# Spark pickles a registered source class by reference, so each Python
+# worker would have to import this package, and one started outside the repo
+# root with no PYTHONPATH cannot. Pickled by value, the reader code travels
+# with the class, however the class gets registered.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _DDL = ", ".join([f"{RECORD_ID} long"] + [f"{c} string" for c in ARTICLE_COLUMNS])
 

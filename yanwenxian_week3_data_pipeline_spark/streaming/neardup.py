@@ -1,20 +1,20 @@
-"""Streaming MinHash-LSH near-duplicate candidates.
+"""Streaming near-duplicate candidates: MinHash-LSH over documents and
+random-hyperplane LSH over embeddings.
 
-The batch LSH dedup (operators/dedup.py) computes signatures with an
-explode + groupBy shuffle — the right shape when the whole corpus is on
-disk. A stream can't shuffle-aggregate per doc without unbounded state, so
-the streaming twin inverts the layout:
+Each stream runs its batch family's own recipe, row by row, then matches
+band keys in state:
 
-1. **Per-row signatures, zero shuffle.** Each document's MinHash signature
-   is one expression over its own shingles (higher-order array functions —
-   interpreted, but per-row and stateless, which is the correct trade for a
-   stream: CPU scales with arrival rate, no state, no exchange). The md5
-   digest list is LET-BOUND (one md5 per shingle, split into the
-   Kirsch-Mitzenmacher (h1, h2) pair exactly like the batch/oracle recipe).
-2. **Band-keyed state.** Rows explode to (band_idx, band_key, id) and group
-   by the band key; ``applyInPandasWithState`` keeps the sorted id list per
-   band and emits a candidate pair (id_new, id_seen) the moment a new doc
-   lands in a band another doc already occupies.
+1. **Per-row bands, zero shuffle.** MinHash rows go through
+   ``minhash_sig_row_expr`` and ``minhash_band_keys`` (operators/dedup.py):
+   the expression the batch Arrow signature kernel is tested bit-equal to,
+   and the batch band-key function itself. Embedding rows go through
+   ``embedding_band_vals_udf`` (functions/vectors.py), the batch operator's
+   band UDF. Both are stateless per-row projections, so CPU scales with the
+   arrival rate and nothing is exchanged before the grouping.
+2. **Band-keyed state.** Band rows group by (band_idx, band_key);
+   ``applyInPandasWithState`` keeps the id list per band and emits a
+   candidate pair (id_new, id_seen) the moment a new id lands in a band
+   another id already occupies.
 
 Invariant (asserted in tests/test_streaming.py): after draining any
 micro-batch slicing of a corpus, the distinct candidate pairs equal the
@@ -24,7 +24,13 @@ batches, so slicing cannot lose or invent a pair.
 State is O(ids per band). In a long-running deployment the state would be
 TTL'd with an event-time timeout (stale bands evicted) — the drain-mode
 tests run timerless for the availableNow termination reason documented in
-streaming/jobs.py.
+streaming/jobs.py. The watermarked variants use EventTimeTimeout, which is
+what arms Spark's late-row filter in front of ``applyInPandasWithState``: a
+row older than the watermark emits no pairs, touches no band state, and is
+counted in the query progress as ``numRowsDroppedByWatermark``. Their
+``ts`` column rides through the banding projection so every band row
+carries its event time. Groups never set a timeout timestamp here —
+eviction of stale bands is the documented production extension.
 """
 
 from __future__ import annotations
@@ -32,9 +38,11 @@ from __future__ import annotations
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
     LongType,
     StringType,
     StructField,
@@ -43,12 +51,14 @@ from pyspark.sql.types import (
 )
 
 from ..constants import (
-    MINHASH_BANDS,
-    MINHASH_NUM_HASHES,
-    MINHASH_ROWS_PER_BAND,
+    EMB_DIM,
+    EMB_LSH_BANDS,
+    EMB_LSH_BITS_PER_BAND,
+    EMB_LSH_PLANES,
+    EMB_LSH_SEED,
 )
-from ..functions.hashing import km_hash_expr
-from ..operators.dedup import shingles_from_text_expr
+from ..functions.vectors import embedding_band_vals_udf, hyperplane_matrix
+from ..operators.dedup import minhash_band_keys, minhash_sig_row_expr, shingles_from_text_expr
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -56,56 +66,18 @@ DOC_STREAM_SCHEMA = StructType(
         StructField("text", StringType(), True),
     ]
 )
-
-
-def minhash_sig_row_expr(shingles: Column, num: int = MINHASH_NUM_HASHES) -> Column:
-    """array<long>[num] MinHash signature as a single per-row expression.
-
-    Same hash recipe as the batch signature table (one md5 per shingle,
-    split into 60/56-bit halves — ``_minhash_sig_table_expr`` /
-    the Arrow kernel in operators/dedup.py), but folded with array_min
-    per hash index instead of a groupBy aggregate. The digest list is
-    let-bound so the ``num`` folds don't recompute the md5s."""
-
-    def h1(d: Column) -> Column:
-        return F.conv(F.substring(d, 1, 15), 16, 10).cast("long")
-
-    def h2(d: Column) -> Column:
-        return F.conv(F.substring(d, 16, 14), 16, 10).cast("long")
-
-    digests = F.transform(shingles, lambda s: F.md5(s))
-    return F.transform(
-        F.array(digests),
-        lambda ds: F.array(
-            *[
-                F.array_min(F.transform(ds, lambda d: km_hash_expr(h1(d), h2(d), i)))
-                for i in range(num)
-            ]
-        ),
-    )[0]
-
-
-def band_structs_expr(
-    sig: Column,
-    bands: int = MINHASH_BANDS,
-    rows_per_band: int = MINHASH_ROWS_PER_BAND,
-) -> Column:
-    """array<struct<band_idx,band_key>> — md5 over each band's signature
-    slice, identical to the batch ``minhash_band_keys`` recipe."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[sig[b * rows_per_band + r] for r in range(rows_per_band)]
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
-
+DOC_TS_STREAM_SCHEMA = StructType(
+    DOC_STREAM_SCHEMA.fields + [StructField("ts", TimestampType(), True)]
+)
+EMB_STREAM_SCHEMA = StructType(
+    [
+        StructField("vec_id", LongType(), True),
+        StructField("embedding", ArrayType(FloatType()), True),
+    ]
+)
+EMB_TS_STREAM_SCHEMA = StructType(
+    EMB_STREAM_SCHEMA.fields + [StructField("ts", TimestampType(), True)]
+)
 
 CAND_OUT_SCHEMA = "band_idx int, band_key string, id_new long, id_seen long"
 CAND_STATE_SCHEMA = "ids array<long>"
@@ -141,6 +113,42 @@ def _band_match_fn(
         yield pd.DataFrame(out, columns=["band_idx", "band_key", "id_new", "id_seen"])
 
 
+def _candidates(banded: DataFrame, timeout: str) -> DataFrame:
+    """(band_idx, band_key, id_new, id_seen) from a stream of band rows."""
+    return banded.groupBy("band_idx", "band_key").applyInPandasWithState(
+        _band_match_fn,
+        outputStructType=CAND_OUT_SCHEMA,
+        stateStructType=CAND_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
+
+def _minhash_bands(docs: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, id, band_idx, band_key) for a (doc_id, text) stream; docs
+    with no shingle have no signature and are dropped, as in the batch."""
+    sh = docs.select(
+        *keep,
+        F.col("doc_id").alias("id"),
+        shingles_from_text_expr(F.col("text")).alias("shingles"),
+    ).where(F.size("shingles") > 0)
+    return minhash_band_keys(
+        sh.select(*keep, "id", minhash_sig_row_expr(F.col("shingles")).alias("sig"))
+    )
+
+
+def _embedding_bands(vecs: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, id, band_idx, band_key) for a (vec_id, embedding) stream,
+    band_val rendered to the string band_key of the shared matcher."""
+    planes = hyperplane_matrix(EMB_LSH_PLANES, EMB_DIM, EMB_LSH_SEED)
+    band_vals = embedding_band_vals_udf(planes, EMB_LSH_BANDS, EMB_LSH_BITS_PER_BAND)
+    return vecs.select(
+        *keep,
+        F.col("vec_id").alias("id"),
+        F.posexplode(band_vals(F.col("embedding"))).alias("band_idx", "band_val"),
+    ).select(*keep, "id", "band_idx", F.col("band_val").cast("string").alias("band_key"))
+
+
 def read_document_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     return spark.readStream.schema(DOC_STREAM_SCHEMA).json(src_dir)
 
@@ -148,30 +156,7 @@ def read_document_stream(spark: SparkSession, src_dir: str) -> DataFrame:
 def minhash_candidates_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """(band_idx, band_key, id_new, id_seen) candidate pairs, streamed."""
     docs = read_document_stream(spark, src_dir)
-    sh = docs.select(
-        F.col("doc_id").alias("id"),
-        shingles_from_text_expr(F.col("text")).alias("shingles"),
-    ).where(F.size("shingles") > 0)
-    sigs = sh.select("id", minhash_sig_row_expr(F.col("shingles")).alias("sig"))
-    banded = sigs.select(
-        "id", F.explode(band_structs_expr(F.col("sig"))).alias("band")
-    ).select("id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key"))
-    return banded.groupBy("band_idx", "band_key").applyInPandasWithState(
-        _band_match_fn,
-        outputStructType=CAND_OUT_SCHEMA,
-        stateStructType=CAND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-DOC_TS_STREAM_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("text", StringType(), True),
-        StructField("ts", TimestampType(), True),
-    ]
-)
+    return _candidates(_minhash_bands(docs), GroupStateTimeout.NoTimeout)
 
 
 def minhash_candidates_stream_watermarked(
@@ -182,142 +167,40 @@ def minhash_candidates_stream_watermarked(
 ) -> DataFrame:
     """Watermarked variant for long-running deployments: documents carry an
     event time, the watermark bounds how late a document may arrive, and a
-    doc older than the watermark is DROPPED BEFORE the stateful matcher —
-    it produces no candidate pairs and touches no band state (visible in
-    the query progress as ``numRowsDroppedByWatermark``). EventTimeTimeout
-    is what arms Spark's late-row filter in front of
-    ``applyInPandasWithState``; the ``ts`` column therefore rides through
-    the banding projection so every exploded band row still carries its
-    event time. Groups never set a timeout timestamp here — eviction of
-    stale bands is the documented production extension. ``reader_options``
-    passes through to the file-stream reader (e.g. ``maxFilesPerTrigger``
-    for source backpressure)."""
-    reader = spark.readStream.schema(DOC_TS_STREAM_SCHEMA)
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
+    doc older than the watermark is DROPPED BEFORE the stateful matcher
+    (see the module docstring). ``reader_options`` passes through to the
+    file-stream reader (e.g. ``maxFilesPerTrigger`` for source
+    backpressure)."""
     docs = (
-        reader.json(src_dir)
+        spark.readStream.schema(DOC_TS_STREAM_SCHEMA)
+        .options(**(reader_options or {}))
+        .json(src_dir)
         .where(F.col("ts").isNotNull())
         .withWatermark("ts", delay)
     )
-    sh = docs.select(
-        "ts",
-        F.col("doc_id").alias("id"),
-        shingles_from_text_expr(F.col("text")).alias("shingles"),
-    ).where(F.size("shingles") > 0)
-    sigs = sh.select("ts", "id", minhash_sig_row_expr(F.col("shingles")).alias("sig"))
-    banded = sigs.select(
-        "ts", "id", F.explode(band_structs_expr(F.col("sig"))).alias("band")
-    ).select(
-        "ts",
-        "id",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_key").alias("band_key"),
-    )
-    return banded.groupBy("band_idx", "band_key").applyInPandasWithState(
-        _band_match_fn,
-        outputStructType=CAND_OUT_SCHEMA,
-        stateStructType=CAND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming embedding-LSH candidates: the random-hyperplane twin of the
-# MinHash stream. Band values are the same numpy-matmul recipe as the batch
-# operator (operators/similarity.py) — a stateless per-batch Arrow
-# projection, so it is streaming-safe — and candidates reuse the generic
-# band-keyed state matcher above (band_val rendered to the string band_key).
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.types import ArrayType, FloatType  # noqa: E402
-
-EMB_STREAM_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), True),
-        StructField("embedding", ArrayType(FloatType()), True),
-    ]
-)
+    return _candidates(_minhash_bands(docs, "ts"), GroupStateTimeout.EventTimeTimeout)
 
 
 def read_embedding_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     return spark.readStream.schema(EMB_STREAM_SCHEMA).json(src_dir)
 
 
-EMB_TS_STREAM_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), True),
-        StructField("embedding", ArrayType(FloatType()), True),
-        StructField("ts", TimestampType(), True),
-    ]
-)
+def embedding_candidates_stream(spark: SparkSession, src_dir: str) -> DataFrame:
+    """(band_idx, band_key, id_new, id_seen) candidate pairs from
+    hyperplane-LSH bands over a vector stream."""
+    vecs = read_embedding_stream(spark, src_dir).where(F.col("embedding").isNotNull())
+    return _candidates(_embedding_bands(vecs), GroupStateTimeout.NoTimeout)
 
 
 def embedding_candidates_stream_watermarked(
     spark: SparkSession, src_dir: str, delay: str = "30 minutes"
 ) -> DataFrame:
     """Watermarked twin of the embedding-LSH stream — same late-data
-    contract as ``minhash_candidates_stream_watermarked``: EventTimeTimeout
-    arms the pre-matcher late-row filter, so a vector older than the
-    watermark emits no pairs, touches no band state, and is counted in
-    ``numRowsDroppedByWatermark``."""
-    from ..constants import (
-        EMB_DIM,
-        EMB_LSH_BANDS,
-        EMB_LSH_BITS_PER_BAND,
-        EMB_LSH_PLANES,
-        EMB_LSH_SEED,
-    )
-    from ..functions.vectors import embedding_band_vals_udf, hyperplane_matrix
-
-    planes = hyperplane_matrix(EMB_LSH_PLANES, EMB_DIM, EMB_LSH_SEED)
-    _band_vals = embedding_band_vals_udf(planes, EMB_LSH_BANDS, EMB_LSH_BITS_PER_BAND)
-
+    contract as ``minhash_candidates_stream_watermarked``."""
     vecs = (
         spark.readStream.schema(EMB_TS_STREAM_SCHEMA)
         .json(src_dir)
         .where(F.col("embedding").isNotNull() & F.col("ts").isNotNull())
         .withWatermark("ts", delay)
     )
-    banded = vecs.select(
-        "ts",
-        F.col("vec_id").alias("id"),
-        F.posexplode(_band_vals(F.col("embedding"))).alias("band_idx", "band_val"),
-    ).select("ts", "id", "band_idx", F.col("band_val").cast("string").alias("band_key"))
-    return banded.groupBy("band_idx", "band_key").applyInPandasWithState(
-        _band_match_fn,
-        outputStructType=CAND_OUT_SCHEMA,
-        stateStructType=CAND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def embedding_candidates_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """(band_idx, band_key, id_new, id_seen) candidate pairs from
-    hyperplane-LSH bands over a vector stream."""
-    from ..constants import (
-        EMB_DIM,
-        EMB_LSH_BANDS,
-        EMB_LSH_BITS_PER_BAND,
-        EMB_LSH_PLANES,
-        EMB_LSH_SEED,
-    )
-    from ..functions.vectors import embedding_band_vals_udf, hyperplane_matrix
-
-    planes = hyperplane_matrix(EMB_LSH_PLANES, EMB_DIM, EMB_LSH_SEED)
-    _band_vals = embedding_band_vals_udf(planes, EMB_LSH_BANDS, EMB_LSH_BITS_PER_BAND)
-
-    vecs = read_embedding_stream(spark, src_dir).where(F.col("embedding").isNotNull())
-    banded = vecs.select(
-        F.col("vec_id").alias("id"),
-        F.posexplode(_band_vals(F.col("embedding"))).alias("band_idx", "band_val"),
-    ).select("id", "band_idx", F.col("band_val").cast("string").alias("band_key"))
-    return banded.groupBy("band_idx", "band_key").applyInPandasWithState(
-        _band_match_fn,
-        outputStructType=CAND_OUT_SCHEMA,
-        stateStructType=CAND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _candidates(_embedding_bands(vecs, "ts"), GroupStateTimeout.EventTimeTimeout)
