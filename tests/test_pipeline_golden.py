@@ -234,6 +234,42 @@ def test_pipeline_is_one_action(spark, fixture_path, tmp_path_factory):
     assert 0 < len(jobs) <= 5
 
 
+def test_pipeline_plan_build_round_trip_budget(spark, fixture_path, tmp_path_factory):
+    """A warm call builds the article plan, from load_articles through
+    report_action, in at most 600 py4j round trips. Per-call Python
+    call-site capture (~5 round trips per Column call) and per-call
+    rebuilding of the constant stage expressions put it at ~4,700."""
+    import gc
+
+    from py4j.java_gateway import GatewayClient
+
+    from yanwenxian_week3_data_pipeline_spark import pipeline
+    from yanwenxian_week3_data_pipeline_spark.schema import RECORD_ID
+
+    out_dir = tmp_path_factory.mktemp("roundtrips")
+    pipeline.run_cleaning_pipeline(
+        spark, fixture_path, out_dir / "cleaned_output.json", out_dir / "quality_report.txt", verbose=False
+    )
+    sent = 0
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        nonlocal sent
+        sent += 1
+        return send(self, *args, **kwargs)
+
+    gc.collect()  # no py4j finalizer traffic from earlier garbage
+    GatewayClient.send_command = counting
+    try:
+        raw = pipeline.load_articles(spark, fixture_path)
+        flagged = pipeline.flag_stages(pipeline.clean_articles(raw))
+        candidate_cols = [c for c in raw.columns if c not in (RECORD_ID, "published_date")]
+        pipeline.report_action(flagged, candidate_cols)
+    finally:
+        GatewayClient.send_command = send
+    assert sent <= 600, sent
+
+
 def test_report_metrics_observed_above_last_exchange(spark, fixture_path):
     """Lemma (a) of pipeline.py: CollectMetrics runs in the result stage,
     above the dedup window's exchange, and the _kept filter stays above it

@@ -17,10 +17,13 @@ oracle-parity tests over the driver parquet tables.
 from __future__ import annotations
 
 import re
+from datetime import datetime
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
+
+from yanwenxian_week3_data_pipeline_spark.constants import HTML_ENTITIES, WHITESPACE_CHARS
 
 SETTINGS = dict(
     max_examples=12,
@@ -195,6 +198,161 @@ def test_parse_iso_date_shape(spark, dates):
     df = spark.createDataFrame([(d,) for d in dates], "d string")
     for r in df.select(parse_iso_date_expr(F.col("d")).alias("iso")).collect():
         assert r["iso"] is None or ISO_RE.match(r["iso"])
+
+
+# -- the article pass's two lemmas and its cached expressions ---------------
+
+_LITERALS = "Tt:-,/"
+
+
+def _renderings(d) -> list[str]:
+    """``d`` rendered in every DATE_FORMATS shape, plus the ordinal and
+    "Sept" spellings the normalize pass rewrites."""
+    mon, month = d.strftime("%b"), d.strftime("%B")
+    return [
+        d.strftime("%Y-%m-%dT%H:%M:%SZ"),
+        d.strftime("%Y-%m-%dT%H:%M:%S+00:00"),
+        d.strftime("%Y-%m-%dT%H:%M:%S"),
+        d.strftime("%Y-%m-%d %H:%M:%S"),
+        d.strftime("%Y-%m-%d"),
+        f"{mon} {d.day}, {d.year}",
+        f"{month} {d.day}, {d.year}",
+        f"{month} {d.day}th, {d.year}",
+        f"Sept {d.day}, {d.year}",
+        f"{d.day}/{d.month}/{d.year}",
+        f"{d.month}/{d.day}/{d.year}",
+    ]
+
+
+def _drop_one_literal(s: str, k: int) -> str:
+    at = [i for i, ch in enumerate(s) if ch in _LITERALS]
+    if not at:
+        return s
+    i = at[k % len(at)]
+    return s[:i] + s[i + 1 :]
+
+
+_rendered = st.tuples(
+    st.datetimes(min_value=datetime(1900, 1, 1)),
+    st.integers(min_value=0, max_value=10),
+    st.sampled_from(["as_is", "lower", "upper", "drop"]),
+    st.integers(min_value=0, max_value=40),
+).map(
+    lambda t: {
+        "as_is": lambda s: s,
+        "lower": str.lower,
+        "upper": str.upper,
+        "drop": lambda s: _drop_one_literal(s, t[3]),
+    }[t[2]](_renderings(t[0])[t[1]])
+)
+_date_like = st.one_of(
+    _rendered,
+    _date,
+    st.text(alphabet="0123456789 " + _LITERALS + "JanuySepZ+", max_size=25),
+    st.text(max_size=25),
+)
+
+
+def _unguarded_parse(col):
+    # the parse before each attempt got its literal guard
+    from yanwenxian_week3_data_pipeline_spark.functions.dates import DATE_FORMATS, _normalize_expr
+
+    def attempts(s):
+        return F.coalesce(*[F.try_to_timestamp(s, F.lit(fmt)) for fmt, _ in DATE_FORMATS])
+
+    return F.transform(F.array(_normalize_expr(col)), lambda s: attempts(s))[0]
+
+
+@given(dates=st.lists(_date_like, min_size=1, max_size=30))
+@settings(**SETTINGS)
+def test_guarded_date_parse_equals_unguarded(spark, dates):
+    """Lemma of parse_timestamp_expr: guarding each attempt with a literal
+    its pattern needs changes no result."""
+    from yanwenxian_week3_data_pipeline_spark.functions.dates import parse_timestamp_expr
+
+    df = spark.createDataFrame([(d,) for d in dates], "d string")
+    rows = df.select(
+        "d",
+        parse_timestamp_expr(F.col("d")).alias("guarded"),
+        _unguarded_parse(F.col("d")).alias("bare"),
+    ).collect()
+    for r in rows:
+        assert r["guarded"] == r["bare"], r["d"]
+
+
+def test_date_pattern_literals_match_only_themselves(spark):
+    """The guards' premise, over every BMP char: put the char in the slot
+    of the literal each pattern is guarded by; the pattern parses exactly
+    when the char is that literal (``T`` also as ``t``: Spark parses
+    case-insensitively)."""
+    from yanwenxian_week3_data_pipeline_spark.functions.dates import DATE_FORMATS
+
+    samples = {
+        "yyyy-MM-dd'T'HH:mm:ssXXX": ("2025-02-20", "14:30:00+00:00", "Tt"),
+        "yyyy-MM-dd'T'HH:mm:ss": ("2025-02-20", "14:30:00", "Tt"),
+        "yyyy-MM-dd HH:mm:ss": ("2025-02-20 14", "30:00", ":"),
+        "yyyy-MM-dd": ("2025-02", "20", "-"),
+        "MMM d, yyyy": ("Jan 15", " 2025", ","),
+        "MMMM d, yyyy": ("March 1", " 2025", ","),
+        "d/M/yyyy": ("15", "03/2025", "/"),
+        "M/d/yyyy": ("3", "15/2025", "/"),
+    }
+    assert set(samples) == {fmt for fmt, _ in DATE_FORMATS}
+    chars = spark.createDataFrame(
+        [(chr(i),) for i in range(0x10000) if not 0xD800 <= i <= 0xDFFF], "c string"
+    )
+    for fmt, (head, tail, lits) in samples.items():
+        s = F.concat(F.lit(head), F.col("c"), F.lit(tail))
+        hits = chars.where(F.try_to_timestamp(s, F.lit(fmt)).isNotNull()).collect()
+        assert sorted(r.c for r in hits) == sorted(lits), fmt
+
+
+_ws_entity_text = st.lists(
+    st.sampled_from(
+        [*WHITESPACE_CHARS, *(e for e, _ in HTML_ENTITIES), "a", "&", ";", "\x1c", "&amp;nbsp;"]
+    ),
+    max_size=12,
+).map("".join)
+
+
+@given(texts=st.lists(st.one_of(st.none(), _ws_entity_text), min_size=1, max_size=20))
+@settings(**SETTINGS)
+def test_cleaned_blank_test_equals_missingness(spark, texts):
+    """Lemma of pipeline._complete: on clean_text_expr output, != "" is
+    exactly not_missing_expr."""
+    from yanwenxian_week3_data_pipeline_spark.functions.text import clean_text_expr, not_missing_expr
+
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    cleaned = clean_text_expr(F.col("t"))
+    for r in df.select(
+        "t", (cleaned != "").alias("cmp"), not_missing_expr(cleaned).alias("full")
+    ).collect():
+        assert r["cmp"] == r["full"], repr(r["t"])
+
+
+def test_pipeline_reuses_stage_exprs_across_sessions(spark, tmp_path):
+    """The cached stage Columns serve a second session unchanged: a run on
+    spark.newSession() writes byte-identical files, and builds no new
+    stage expressions."""
+    import json
+
+    from tests.test_pipeline_golden import _fixture_records
+    from yanwenxian_week3_data_pipeline_spark import pipeline
+
+    src = tmp_path / "articles.json"
+    src.write_text(json.dumps(_fixture_records(), indent=2), encoding="utf-8")
+    builders = (pipeline._cleaned_exprs, pipeline.complete_expr, pipeline._flag_exprs, pipeline._report_exprs)
+    outputs, built = [], []
+    for i, session in enumerate((spark, spark.newSession())):
+        out = tmp_path / f"run{i}"
+        out.mkdir()
+        pipeline.run_cleaning_pipeline(
+            session, src, out / "cleaned_output.json", out / "quality_report.txt", verbose=False
+        )
+        outputs.append([(out / f).read_bytes() for f in ("cleaned_output.json", "quality_report.txt")])
+        built.append([b.cache_info().misses for b in builders])
+    assert outputs[0] == outputs[1]
+    assert built[0] == built[1]
 
 
 if __name__ == "__main__":

@@ -31,6 +31,7 @@ more. Returns the cleaned post-dedup DataFrame (cleaner.py:393), lazily.
 
 from __future__ import annotations
 
+import functools
 from collections import Counter
 from collections.abc import Sequence
 from datetime import datetime, timedelta, timezone
@@ -41,9 +42,9 @@ from pyspark.sql.window import Window
 
 from .domains.articles import article_rules
 from .functions.dates import parse_iso_date_expr
-from .functions.text import clean_text_expr, not_missing_expr
+from .functions.text import clean_text_expr
 from .operators.incomplete import REQUIRED_ARTICLE_COLUMNS
-from .operators.validate import with_validation
+from .operators.validate import validation_columns
 from .report import ValidationStats, render_quality_report
 from .schema import RECORD_ID, TEXT_COLUMNS
 from .sinks.json_records import save_records_pretty, save_text
@@ -51,20 +52,75 @@ from .sources.articles_json import load_articles
 
 ISO_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
+# The stage expressions below are built once per process, on first use, by
+# the functools.cache'd builders. They depend only on module constants (and
+# the report's column list, which is their cache key), and a Column is an
+# immutable expression tree bound to no session, so one object serves every
+# call on every session (tests/test_properties.py runs the pipeline twice,
+# the second time on a new session, and compares the output bytes).
+# Rebuilding them on each call cost ~1,650 py4j round trips per pass.
+
+
+@functools.cache
+def _cleaned_exprs() -> dict[str, Column]:
+    """Stage 2: cleaned text columns and the parsed published_date, by
+    output column. Callers must not mutate the (shared) dict."""
+    out = {c: clean_text_expr(F.col(c)) for c in TEXT_COLUMNS}
+    out["published_date"] = parse_iso_date_expr(F.col("published_date"))
+    return out
+
+
+@functools.cache
+def complete_expr() -> Column:
+    """``_complete`` on a ``clean_articles`` frame: no required column
+    missing (null, empty or whitespace-only). Batch and stream share it."""
+    # Lemma: on a clean_text_expr output x, not_missing_expr(x) == (x != "").
+    # x is never null (coalesce to ""), every whitespace run in it is one
+    # space (collapsed), and it has no leading or trailing space (trimmed),
+    # so the missingness test's collapse and trim leave x unchanged and
+    # "null or blank after trimming" reduces to x == "". Comparing skips a
+    # second regex pass per required column per row.
+    complete = F.lit(True)
+    for c in REQUIRED_ARTICLE_COLUMNS:
+        complete = complete & (F.col(c) != "")
+    return complete
+
+
+@functools.cache
+def _flag_exprs() -> tuple[Column, dict[str, Column]]:
+    """(``_kept``, the validation verdict columns)."""
+    # hash prefix on the key: same grouping, long-first shuffle comparisons
+    w = (
+        Window.partitionBy(F.xxhash64("title", "url"), "title", "url")
+        .orderBy(F.col(RECORD_ID).asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    kept = F.col("_complete") & (F.sum(F.col("_complete").cast("int")).over(w) == 1)
+    return kept, validation_columns(article_rules())
+
+
+@functools.cache
+def _funnel_exprs() -> tuple[Column, ...]:
+    return (
+        F.count(F.lit(1)).alias("n_load"),
+        F.sum(F.col("_complete").cast("long")).alias("n_complete"),
+        F.sum(F.col("_kept").cast("long")).alias("n_dedup"),
+        F.sum((F.col("_kept") & F.col("passed")).cast("long")).alias("n_valid"),
+    )
+
 
 def clean_articles(df: DataFrame) -> DataFrame:
     """Stages 2a+2b: text cleaning on the text columns; permissive date
     standardization of published_date to an ISO string."""
-    out = df.withColumns({c: clean_text_expr(F.col(c)) for c in TEXT_COLUMNS if c in df.columns})
-    if "published_date" in out.columns:
-        out = out.withColumn("published_date", parse_iso_date_expr(F.col("published_date")))
-    return out
+    cols = set(df.columns)
+    return df.withColumns({c: e for c, e in _cleaned_exprs().items() if c in cols})
 
 
 def flag_stages(cleaned: DataFrame) -> DataFrame:
     """Add per-row stage-survival flags to a cleaned frame:
 
-    - ``_complete`` — survives drop_incomplete (no required column missing);
+    - ``_complete`` — survives drop_incomplete (no required column missing;
+      ``complete_expr``);
     - ``_kept``     — additionally survives keep-first dedup: first complete
       row (by record_id) per (title, url) key. The keys are already
       normalized by clean_articles (clean_text is idempotent), so the window
@@ -73,22 +129,9 @@ def flag_stages(cleaned: DataFrame) -> DataFrame:
       to the complete subset;
     - ``passed/reason/message`` — the validation verdict columns.
     """
-    complete = F.lit(True)
-    for c in REQUIRED_ARTICLE_COLUMNS:
-        if c in cleaned.columns:
-            complete = complete & not_missing_expr(F.col(c))
-    flagged = cleaned.withColumn("_complete", complete)
-    # hash prefix on the key: same grouping, long-first shuffle comparisons
-    w = (
-        Window.partitionBy(F.xxhash64("title", "url"), "title", "url")
-        .orderBy(F.col(RECORD_ID).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    flagged = flagged.withColumn(
-        "_kept",
-        F.col("_complete") & (F.sum(F.col("_complete").cast("int")).over(w) == 1),
-    )
-    return with_validation(flagged, article_rules())
+    kept, verdicts = _flag_exprs()
+    flagged = cleaned.withColumn("_complete", complete_expr()).withColumn("_kept", kept)
+    return flagged.withColumns(verdicts)
 
 
 def attach_funnel_observation(
@@ -101,24 +144,15 @@ def attach_funnel_observation(
     pass with accumulator traffic piggybacked on that action.
     ``name=None`` gives the Observation a unique name."""
     obs = Observation(name)
-    observed = flagged.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_load"),
-        F.sum(F.col("_complete").cast("long")).alias("n_complete"),
-        F.sum(F.col("_kept").cast("long")).alias("n_dedup"),
-        F.sum((F.col("_kept") & F.col("passed")).cast("long")).alias("n_valid"),
-        *extra,
-    )
+    observed = flagged.observe(obs, *_funnel_exprs(), *extra)
     return observed, obs
 
 
-def report_action(flagged: DataFrame, candidate_cols: list[str]) -> tuple[DataFrame, Observation]:
-    """The pipeline's one action: (kept-rows frame, its Observation).
-    Collecting the frame fills the Observation with every scalar the report
-    needs. Passed rows carry their text columns; failed rows carry nulls
-    there, since only record_id, reason and message are read for them."""
+@functools.cache
+def _report_exprs(candidate_cols: tuple[str, ...]) -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """(report aggregates, kept-row projection) for ``report_action``."""
     kept, passed = F.col("_kept"), F.col("passed")
-    text_cols = candidate_cols + ["published_date"]
+    text_cols = (*candidate_cols, "published_date")
 
     ts = F.to_timestamp(F.col("published_date"), ISO_TS_FORMAT)
     aggs = [
@@ -145,11 +179,21 @@ def report_action(flagged: DataFrame, candidate_cols: list[str]) -> tuple[DataFr
         aggs.append(
             F.sum(F.when(kept & ~blank, 1).otherwise(0)).cast("long").alias(f"_ne_{c}")
         )
-    observed, obs = attach_funnel_observation(flagged, name=None, extra=aggs)
-    rows = observed.where(kept).select(
-        RECORD_ID, "passed", "reason", "message", *[F.when(passed, F.col(c)).alias(c) for c in text_cols]
+    row = (
+        F.col(RECORD_ID), passed, F.col("reason"), F.col("message"),
+        *[F.when(passed, F.col(c)).alias(c) for c in text_cols],
     )
-    return rows, obs
+    return tuple(aggs), row
+
+
+def report_action(flagged: DataFrame, candidate_cols: list[str]) -> tuple[DataFrame, Observation]:
+    """The pipeline's one action: (kept-rows frame, its Observation).
+    Collecting the frame fills the Observation with every scalar the report
+    needs. Passed rows carry their text columns; failed rows carry nulls
+    there, since only record_id, reason and message are read for them."""
+    aggs, row = _report_exprs(tuple(candidate_cols))
+    observed, obs = attach_funnel_observation(flagged, name=None, extra=aggs)
+    return observed.where(F.col("_kept")).select(*row), obs
 
 
 def _utc(micros: int) -> datetime:

@@ -327,11 +327,13 @@ def _minhash_sig_sql(digests_col: str, num: int = MINHASH_NUM_HASHES) -> str:
 # d → sh → hashed → sigs: the one oracle chain of every MinHash query. ONE
 # md5 per shingle is staged as a list (ds) before the num_hashes folds.
 # Docs without a shingle have no signature row, as in the Arrow kernel.
+# ``sigs`` is MATERIALIZED: DuckDB inlines a plain CTE at each reference, and
+# the LSH pairs read it three times (bands, both sides of the verify join).
 _MINHASH_SIGS_CTES = f"""d AS ({_CLEANED}),
 sh AS (SELECT doc_id, {_shingles_sql_inline('c')} AS shingles FROM d),
 hashed AS (SELECT doc_id, shingles, list_transform(shingles, s -> md5(s)) AS ds
            FROM sh WHERE len(shingles) > 0),
-sigs AS (SELECT doc_id, shingles, {_minhash_sig_sql('ds')} AS sig FROM hashed)"""
+sigs AS MATERIALIZED (SELECT doc_id, shingles, {_minhash_sig_sql('ds')} AS sig FROM hashed)"""
 
 
 def _q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,9 +364,9 @@ _band_structs = ", ".join(
     "{'band_idx': %d, 'band_key': %s}" % (b, _band_key_sql(b)) for b in range(MINHASH_BANDS)
 )
 
-_SQL_DEDUP_MINHASH = f"""
-WITH {_MINHASH_SIGS_CTES},
-banded_all AS (SELECT doc_id, u.band_idx AS band_idx, u.band_key AS band_key
+# the LSH pairs after _MINHASH_SIGS_CTES: a CTE tail ending in ``mh_pairs``,
+# so a query that already holds ``sigs`` reads the pairs off the same chain
+_MINHASH_PAIRS_CTES = f"""banded_all AS (SELECT doc_id, u.band_idx AS band_idx, u.band_key AS band_key
            FROM sigs, UNNEST([{_band_structs}]) AS t(u)),
 ok_buckets AS (SELECT band_idx, band_key FROM banded_all
                GROUP BY band_idx, band_key HAVING count(*) <= {DEDUP_MAX_BUCKET}),
@@ -379,8 +381,13 @@ verified AS (
           / CAST(len(sa.shingles) + len(sb.shingles) - len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT), 6) AS jaccard
   FROM cand
   JOIN sigs sa ON sa.doc_id = doc_a
-  JOIN sigs sb ON sb.doc_id = doc_b)
-SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {MINHASH_JACCARD_THRESHOLD}
+  JOIN sigs sb ON sb.doc_id = doc_b),
+mh_pairs AS (SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {MINHASH_JACCARD_THRESHOLD})"""
+
+_SQL_DEDUP_MINHASH = f"""
+WITH {_MINHASH_SIGS_CTES},
+{_MINHASH_PAIRS_CTES}
+SELECT doc_a, doc_b, jaccard FROM mh_pairs
 """
 
 
@@ -426,7 +433,7 @@ def _q_minhash_est_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_MINHASH_EST_GATE = f"""
 WITH {_MINHASH_SIGS_CTES},
-pairs AS (SELECT doc_a, doc_b, jaccard FROM ({_SQL_DEDUP_MINHASH}))
+{_MINHASH_PAIRS_CTES}
 SELECT p.doc_a, p.doc_b, p.jaccard,
   round(CAST(len(list_filter(range(1, {MINHASH_NUM_HASHES + 1}),
                              i -> sa.sig[i] = sb.sig[i])) AS DOUBLE)
@@ -434,7 +441,7 @@ SELECT p.doc_a, p.doc_b, p.jaccard,
   round(abs(round(CAST(len(list_filter(range(1, {MINHASH_NUM_HASHES + 1}),
                                        i -> sa.sig[i] = sb.sig[i])) AS DOUBLE)
                   / {float(MINHASH_NUM_HASHES)}, 6) - p.jaccard), 6) AS abs_err
-FROM pairs p
+FROM mh_pairs p
 JOIN sigs sa ON sa.doc_id = p.doc_a
 JOIN sigs sb ON sb.doc_id = p.doc_b
 """

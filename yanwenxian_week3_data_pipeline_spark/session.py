@@ -16,6 +16,19 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "ywx-pipeline-spark", shuffle_partitions: int | None = None) -> SparkSession:
+    """The engine's session (module docstring for the tuning).
+
+    PySpark's DataFrame debugging is switched off: with
+    ``spark.python.sql.dataFrameDebugging.enabled`` on (PySpark's default),
+    every Column and DataFrame call captures its Python call site and ships
+    it to the JVM, about five py4j round trips per call. Building the
+    article pipeline's plan spent ~3,000 round trips on that bookkeeping
+    alone. The price: DataFrame error messages no longer carry the Python
+    call-site context (the file and line that built the failing
+    expression). The error class, the message, the SQL fragment and the JVM
+    stack trace are unchanged. PySpark reads the setting once per process,
+    on the first Column call made under an active session, and keeps the
+    answer."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     sp = shuffle_partitions if shuffle_partitions is not None else int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
     builder = (
@@ -31,6 +44,8 @@ def get_spark(app_name: str = "ywx-pipeline-spark", shuffle_partitions: int | No
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # no per-call Python call-site capture (docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

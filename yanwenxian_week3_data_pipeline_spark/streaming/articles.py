@@ -5,7 +5,7 @@ and validated records are appended downstream — the shape article ingest
 has when the scraper feeds a directory/queue instead of one batch file.
 
 The stateless stages REUSE the batch expressions (``clean_articles``,
-``not_missing_expr``, ``with_validation``) — identical logical plans, so
+``complete_expr``, ``with_validation``) — identical logical plans, so
 batch and stream cannot drift. The one stateful stage is dedup:
 
 - batch ``dedup_keep_first`` = first record_id per normalized (title, url);
@@ -28,10 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..domains.articles import article_rules
-from ..operators.incomplete import REQUIRED_ARTICLE_COLUMNS
 from ..operators.validate import with_validation
-from ..pipeline import clean_articles
-from ..functions.text import not_missing_expr
+from ..pipeline import clean_articles, complete_expr
 from ..schema import ARTICLE_SCHEMA, RECORD_ID
 
 # the JSONL feed carries the ingest-order record id assigned upstream
@@ -57,12 +55,7 @@ def clean_valid_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     stream of valid cleaned articles (verdict columns dropped, like the
     batch pipeline's saved output)."""
     cleaned = clean_articles(article_feed(spark, src_dir))
-
-    complete = F.lit(True)
-    for c in REQUIRED_ARTICLE_COLUMNS:
-        complete = complete & not_missing_expr(F.col(c))
-
-    deduped = cleaned.where(complete).dropDuplicates(["title", "url"])
+    deduped = cleaned.where(complete_expr()).dropDuplicates(["title", "url"])
 
     validated = with_validation(deduped, article_rules())
     return validated.where(F.col("passed")).drop("passed", "reason", "message")
